@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 /** Benchmark main: runs every catalog query on SPARK_GRAFT_SF_DIR,
   * prints ONE JSON line with per-query seconds. A warm-up pass (session
@@ -72,6 +73,11 @@ object Bench {
     val probe = """"probe":\{"n":\d+,"min":[0-9.eE+-]+,"med":([0-9.eE+-]+)""".r
     probe.findFirstMatchIn(text).flatMap(_.group(1).toDoubleOption).filter(_ > 0)
   }
+
+  /** Class, message and first stack frame of a failure, for stderr. */
+  private[graft] def describe(e: Throwable): String =
+    s"${e.getClass.getName}: ${e.getMessage}" +
+      e.getStackTrace.headOption.fold("")(f => s" at $f")
 
   private def recordText(record: String): String =
     try java.nio.file.Files.readString(java.nio.file.Paths.get(s"/root/repo/$record"))
@@ -300,7 +306,10 @@ object Bench {
       (1 to qIters).map { _ =>
         val t0 = System.nanoTime()
         try { fn(spark, sfDir).count() }
-        catch { case _: Throwable => failed += name }
+        catch { case NonFatal(e) =>
+          failed += name
+          System.err.println(s"[bench] $name failed: ${describe(e)}")
+        }
         (System.nanoTime() - t0) / 1e9
       }
     }
@@ -464,7 +473,7 @@ object Bench {
     if (only.isEmpty && canonicalSf == "/root/testdata/sf0.1" && recordUsable)
       try java.nio.file.Files.writeString(java.nio.file.Paths.get(s"/root/repo/$record"),
         render(identity, "%.4f", full = true) + "\n")
-      catch { case _: Throwable => }
+      catch { case NonFatal(e) => System.err.println(s"[bench] $record not written: ${describe(e)}") }
     else System.err.println(
       s"[bench] $record not updated: " +
         (if (only.nonEmpty) s"filtered run (${only.get.mkString(",")})"

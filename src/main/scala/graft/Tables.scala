@@ -5,7 +5,9 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
 /** Loader for the driver-generated parquet corpus (TESTDATA.md).
-  * One parquet file per table under a scale-factor directory.
+  * One parquet file per table under a scale-factor directory. A load
+  * takes its schema from the table's footer on the driver
+  * ([[graft.core.ParquetFooter]]), so it runs no Spark job.
   */
 object Tables {
   val All: Seq[String] = Seq(
@@ -20,7 +22,7 @@ object Tables {
     * and skip the branch.
     */
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$sfDir/$name.parquet")
+    val df = graft.core.ParquetFooter.read(spark, s"$sfDir/$name.parquet")
     if (name == "events" && df.schema("ts").dataType == LongType)
       // integral `div`, NOT `/`: the ns epoch (~1.7e18) exceeds a
       // double's 53-bit mantissa, so float division drifts by ~100 ns.

@@ -45,8 +45,8 @@ object Verify {
     selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      catch { case scala.util.control.NonFatal(e) =>
+        System.err.println(s"[verify] $name failed: ${Bench.describe(e)}")
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

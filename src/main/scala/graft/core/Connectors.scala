@@ -19,7 +19,15 @@ trait Connector {
   def name: String
   /** Scan: `get_data(index)` analog (S1/S6/S10…). */
   def read(spark: SparkSession, index: String): DataFrame
-  /** Sink: `save_data(index, batch)` analog. Mode semantics per [[WriteMode]]. */
+  /** Sink: `save_data(index, batch)` analog. Mode semantics per [[WriteMode]].
+    *
+    * Count contract: a sink executes `df` through the Dataset API (a
+    * `DataFrameWriter`, `Dataset.foreachPartition`/`mapPartitions`) at
+    * most once, or not at all. [[MigrationJob.runOne]] attaches an
+    * observation to `df` and reports the rows it saw pass; a `df.rdd`
+    * path, or an extra action such as `df.limit(0).write`, leaves that
+    * observation empty or wrong.
+    */
   def write(df: DataFrame, index: String, mode: WriteMode): Unit
   /** Catalog: `get_indexes()` analog. */
   def listIndexes(spark: SparkSession): Seq[String]
@@ -129,7 +137,8 @@ final case class FileConnector(
         case None => // plain layout or absent: native read below
       }
     }
-    configure(spark.read).format(format).load(target)
+    if (format == "parquet" && !isRemote && options.isEmpty) ParquetFooter.read(spark, target)
+    else configure(spark.read).format(format).load(target)
   }
 
   private def configureW[T](w: DataFrameWriter[T]): DataFrameWriter[T] =
@@ -596,15 +605,17 @@ final case class JdbcConnector(
     }
   }
   /** Auto-create before a keyed write (P7, `create_index`): Spark's JDBC
-    * writer emits dialect-correct DDL from the DataFrame schema (empty
-    * Append), then we try to add the pk constraint — best-effort, since
+    * writer emits dialect-correct DDL from the DataFrame schema (an empty
+    * frame of that schema, Append — the caller's frame is never run
+    * here), then we try to add the pk constraint — best-effort, since
     * e.g. Derby rejects PKs on nullable columns; ANSI MERGE enforces the
     * key via its ON predicate regardless.
     */
   private def ensureTable(df: DataFrame, index: String, pks: Seq[String]): Unit =
     if (!JdbcExec.tableExists(url, index, options)) {
+      val empty = df.sparkSession.createDataFrame(java.util.Collections.emptyList[Row](), df.schema)
       options.foldLeft(
-        df.limit(0).write.format("jdbc").option("url", url).option("dbtable", index)
+        empty.write.format("jdbc").option("url", url).option("dbtable", index)
       ) { case (w, (k, v)) => w.option(k, v) }.mode(SaveMode.Append).save()
       try {
         JdbcExec.execute(url,

@@ -1,6 +1,8 @@
 package graft.core
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
+import org.apache.spark.sql.graft.Bridge
 
 /** The `Migration` pipeline (SURVEY.md §3.1, `d22d/task.py:31-170`)
   * re-expressed as one declarative plan:
@@ -30,16 +32,29 @@ final case class MigrationJob(
     createDdl: Option[(DataFrame, String) => Unit] = None, // P7 hook: DDL emission before first write
 ) {
 
-  /** Copy one table (`run_one` analog). Returns the row count written. */
+  /** Copy one table (`run_one` analog). Returns the rows this step sent
+    * to the sink: for Overwrite that is the new table, for Append or an
+    * upsert into an existing table it is the batch, not the table total.
+    *
+    * The rows are counted while the sink writes them: the sink gets the
+    * frame with an [[Observation]] attached, and once `write` returns the
+    * listener bus is drained so the observation has landed. Nothing is
+    * read back. When the observation is absent, empty or 0 — a lazy sink
+    * such as [[MemConnector]], a sink that re-plans the frame in a cloned
+    * session, an empty batch — the frame is counted by itself instead.
+    */
   def runOne(spark: SparkSession, from: String, to: String): Long = {
     var df = transform(source.read(spark, from))
     if (dedup) df = if (dedupCols.nonEmpty) df.dropDuplicates(dedupCols) else df.dropDuplicates()
     limit.foreach(n => df = df.limit(n))
     createDdl.foreach(f => f(df, to))
-    // Count and write in one pass: cache only when the caller wants the
-    // count would double-scan; instead count the written output lazily.
-    sink.write(df, to, mode)
-    sink.read(spark, to).count()
+    val sent = Observation()
+    sink.write(df.observe(sent, count(lit(1))), to, mode)
+    // a bus still busy after a minute leaves the frame to be counted below
+    try Bridge.waitListenerBusEmpty(spark.sparkContext, 60000L)
+    catch { case _: java.util.concurrent.TimeoutException => () }
+    sent.future.value.flatMap(_.toOption).filter(_.length > 0).map(_.getLong(0))
+      .filter(_ > 0).getOrElse(df.count())
   }
 
   /** Whole-database copy (P1): every index in the source catalog, with

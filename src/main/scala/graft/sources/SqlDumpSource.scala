@@ -2,7 +2,7 @@ package graft.sources
 
 import graft.core.{Connector, SchemaInfer, WriteMode}
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import java.io.{BufferedReader, InputStreamReader}
 import java.nio.charset.StandardCharsets
@@ -60,9 +60,12 @@ object SqlDumpSource {
            schemaScanLines: Int = 100000): DataFrame = {
     import spark.implicits._
     val created = scanSchemas(spark, path, schemaScanLines).get(table)
-    val prefix = s"""(?is)^\\s*(INSERT|REPLACE)\\s+(?:IGNORE\\s+)?INTO\\s+[`"]?${java.util.regex.Pattern.quote(table)}[`"]?[\\s(].*"""
+    // compiled once and shipped in the closure (`String.matches` would
+    // recompile it for every line)
+    val prefix = java.util.regex.Pattern.compile(
+      s"""(?is)^\\s*(INSERT|REPLACE)\\s+(?:IGNORE\\s+)?INTO\\s+[`"]?${java.util.regex.Pattern.quote(table)}[`"]?[\\s(].*""")
     val stmts = spark.read.textFile(listFiles(spark, path).map(_.toString): _*)
-      .filter(_.matches(prefix))
+      .filter(line => prefix.matcher(line).matches())
     // Column layout: CREATE TABLE order, else the first statement's
     // explicit column list, else positional c0..cN.
     val columns: Seq[String] = created.getOrElse {
@@ -110,12 +113,11 @@ object SqlDumpSource {
   ): Unit = {
     val spark = df.sparkSession
     val columns = df.columns.toSeq
-    import spark.implicits._
-    val stmtDs = df.rdd.mapPartitions { it =>
+    val stmtDs = df.mapPartitions { (it: Iterator[Row]) =>
       it.grouped(batchRows).map { batch =>
         SqlDumpParser.renderInsert(table, columns, batch.map(_.toSeq), insertMode, onDupUpdate)
       }
-    }.toDS()
+    }(Encoders.STRING)
     stmtDs.write.mode(if (overwrite) SaveMode.Overwrite else SaveMode.Append).text(path)
     // sidecar DDL (after the data write so Overwrite doesn't clobber it)
     val ddl = SchemaInfer.toMySqlDdl(df.schema, table, pks) + ";\n"

@@ -139,7 +139,7 @@ object XlsxSource {
     val fs0 = target.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
     if (fs0.exists(target)) fs0.delete(target, true)
     fs0.mkdirs(target)
-    df.rdd.foreachPartition { it =>
+    df.foreachPartition { (it: Iterator[Row]) =>
       if (it.hasNext) {
         val pid = org.apache.spark.TaskContext.getPartitionId()
         val bytes = workbookBytes(header, it.map(_.toSeq), rolloverRows)
