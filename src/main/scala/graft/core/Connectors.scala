@@ -1,6 +1,8 @@
 package graft.core
 
 import org.apache.spark.sql.{DataFrame, DataFrameReader, DataFrameWriter, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.jdbc.JdbcDialects
+import org.apache.spark.sql.types.StructType
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import java.nio.file.{Files, Path, Paths}
 import scala.collection.concurrent.TrieMap
@@ -606,20 +608,26 @@ final case class JdbcConnector(
   }
   /** Auto-create before a keyed write (P7, `create_index`): Spark's JDBC
     * writer emits dialect-correct DDL from the DataFrame schema (an empty
-    * frame of that schema, Append — the caller's frame is never run
-    * here), then we try to add the pk constraint — best-effort, since
-    * e.g. Derby rejects PKs on nullable columns; ANSI MERGE enforces the
-    * key via its ON predicate regardless.
+    * frame of that schema with the pk columns NOT NULL, Append — the
+    * caller's frame is never run here), then the pk constraint is added
+    * on the names as that writer quoted them. Best-effort, since not
+    * every store takes `ADD PRIMARY KEY`; ANSI MERGE enforces the key
+    * via its ON predicate regardless, but without it concurrent MERGE
+    * batches lock whole scans (Derby deadlocks).
     */
   private def ensureTable(df: DataFrame, index: String, pks: Seq[String]): Unit =
     if (!JdbcExec.tableExists(url, index, options)) {
-      val empty = df.sparkSession.createDataFrame(java.util.Collections.emptyList[Row](), df.schema)
+      val keys = pks.map(k => df.columns.find(_.equalsIgnoreCase(k)).getOrElse(k))
+      val keyed = StructType(df.schema.map(f => if (keys.contains(f.name)) f.copy(nullable = false) else f))
+      val empty = df.sparkSession.createDataFrame(java.util.Collections.emptyList[Row](), keyed)
       options.foldLeft(
         empty.write.format("jdbc").option("url", url).option("dbtable", index)
       ) { case (w, (k, v)) => w.option(k, v) }.mode(SaveMode.Append).save()
+      val dialect = JdbcDialects.get(url)
       try {
         JdbcExec.execute(url,
-          s"ALTER TABLE $index ADD PRIMARY KEY (${pks.mkString(", ")})", options)
+          s"ALTER TABLE $index ADD PRIMARY KEY (${keys.map(dialect.quoteIdentifier).mkString(", ")})",
+          options)
         ()
       } catch { case _: java.sql.SQLException => () }
     }

@@ -4,6 +4,7 @@ import graft.core.{Connector, SchemaInfer, WriteMode}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import java.nio.charset.StandardCharsets
 
 /** Emulated document/KV stores. No ES/Mongo server exists in this
@@ -179,8 +180,14 @@ final case class GridFsConnector(name: String, root: String, chunkSize: Int = 25
          |  i -> struct(i as n, substring(content, i * $chunkSize + 1, $chunkSize) as data)))
          |""".stripMargin).as("c"))
       .select(col("files_id"), col("upload"), col("c.n").as("n"), col("c.data").as("data"))
-    files.write.mode(saveMode).parquet(filesPath(index))
-    chunks.write.mode(saveMode).parquet(chunksPath(index))
+    // two writes over one frame: cache it (unless the caller already
+    // has) so its plan runs once
+    val cacheHere = df.storageLevel == StorageLevel.NONE
+    if (cacheHere) df.persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      files.write.mode(saveMode).parquet(filesPath(index))
+      chunks.write.mode(saveMode).parquet(chunksPath(index))
+    } finally if (cacheHere) { df.unpersist(); () }
   }
 
   def read(spark: SparkSession, index: String): DataFrame = {
@@ -203,11 +210,5 @@ final case class GridFsConnector(name: String, root: String, chunkSize: Int = 25
       .orderBy(col("filename"))
   }
 
-  def listIndexes(spark: SparkSession): Seq[String] = {
-    val p = new Path(root)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Nil
-    else fs.listStatus(p).toSeq.map(_.getPath.getName)
-      .filter(_.endsWith(".files")).map(_.stripSuffix(".files")).sorted
-  }
+  def listIndexes(spark: SparkSession): Seq[String] = Listing.indexes(spark, root, ".files")
 }

@@ -1,11 +1,7 @@
 package graft.sources
 
 import graft.core.{Connector, WriteMode}
-import com.univocity.parsers.csv.{CsvParser, CsvParserSettings}
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
-import java.io.ByteArrayInputStream
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.charset.StandardCharsets
 import java.util.zip.CRC32
 
@@ -23,15 +19,12 @@ import java.util.zip.CRC32
   * silently skipping, so a user never gets a partial table. Encrypted
   * members and RAR5 (8-byte marker) likewise fail loudly.
   *
-  * Scale shape: identical to [[ZipSource]] — one `binaryFile` row per
-  * archive, member extraction + CSV parse in executors, parallelism =
-  * archive count (rar is not splittable; a 100 TB corpus should land as
-  * many medium archives).
+  * Scale shape: identical to [[ZipSource]] — read through
+  * `spark.read.format("rar")`, one input partition per archive, member
+  * extraction + CSV parse in executors (rar is not splittable; a 100 TB
+  * corpus should land as many medium archives).
   */
-object RarSource extends Serializable {
-  // Serializable: executor-side closures call `members` through the
-  // module instance (unlike ZipSource, whose lifted closure is
-  // self-contained), so the stateless module ships with the task.
+object RarSource {
 
   private val Marker = Array[Byte](0x52, 0x61, 0x72, 0x21, 0x1a, 0x07, 0x00)
 
@@ -229,50 +222,13 @@ object RarSource extends Serializable {
       } catch { case _: java.io.IOException => None }
     }
 
-  /** Archives of CSV members → one table, members concatenated —
-    * same contract as [[ZipSource.read]].
+  /** One archive → (header, rows) of its CSV members ([[CsvMembers]]),
+    * the `parse` behind `spark.read.format("rar")`.
     */
-  def read(
-      spark: SparkSession,
-      path: String,
-      memberFilter: String => Boolean = _.toLowerCase.endsWith(".csv"),
-  ): DataFrame = {
-    val bin = spark.read.format("binaryFile").load(path)
-      .select("path", "content")
-
-    def parseMembers(content: Array[Byte]): Iterator[(String, Array[Array[String]])] =
-      members(content).iterator
-        .filter { case (name, _) => memberFilter(name) }
-        .map { case (name, body) =>
-          val settings = new CsvParserSettings()
-          settings.setLineSeparatorDetectionEnabled(true)
-          settings.setMaxCharsPerColumn(1 << 20)
-          val rows = new CsvParser(settings)
-            .parseAll(new ByteArrayInputStream(body), StandardCharsets.UTF_8)
-          name -> rows.toArray(Array.empty[Array[String]])
-        }
-
-    // Schema pass: first matching member's header — deterministic
-    // archive choice (path order), same rule as the xls sources.
-    val firstContent = bin.orderBy("path").limit(1).collect().headOption
-      .map(_.getAs[Array[Byte]]("content"))
-      .getOrElse(throw new IllegalArgumentException(s"no archives at $path"))
-    val header = parseMembers(firstContent)
-      .flatMap { case (_, rows) => rows.headOption }
-      .toSeq.headOption
-      .getOrElse(throw new IllegalArgumentException(s"no CSV members in $path"))
-    val schema = StructType(header.map(c => StructField(c, StringType, nullable = true)))
-    val nCols = header.length
-
-    val rowsRdd = bin.rdd.flatMap { r =>
-      parseMembers(r.getAs[Array[Byte]]("content")).flatMap { case (_, rows) =>
-        rows.iterator.drop(1).map { vals =>
-          Row.fromSeq(vals.padTo(nCols, null).take(nCols).toSeq)
-        }
-      }
-    }
-    spark.createDataFrame(rowsRdd, schema)
-  }
+  def parse(content: Array[Byte]): (Seq[String], Seq[Seq[String]]) =
+    CsvMembers.table(members(content).iterator.collect {
+      case (name, body) if CsvMembers.isCsv(name) => body
+    })
 }
 
 /** Registry connector: `root/<index>.rar` archives of CSVs. Scan-only,
@@ -280,14 +236,8 @@ object RarSource extends Serializable {
   */
 final case class RarConnector(name: String, root: String) extends Connector {
   def read(spark: SparkSession, index: String): DataFrame =
-    RarSource.read(spark, s"$root/$index.rar")
+    spark.read.format("rar").load(s"$root/$index.rar")
   def write(df: DataFrame, index: String, mode: WriteMode): Unit =
     throw new UnsupportedOperationException("rar connector is scan-only (S17)")
-  def listIndexes(spark: SparkSession): Seq[String] = {
-    val p = new Path(root)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Nil
-    else fs.listStatus(p).toSeq.map(_.getPath.getName)
-      .filter(_.endsWith(".rar")).map(_.stripSuffix(".rar")).sorted
-  }
+  def listIndexes(spark: SparkSession): Seq[String] = Listing.indexes(spark, root, ".rar")
 }

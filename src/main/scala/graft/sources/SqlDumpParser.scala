@@ -40,27 +40,31 @@ object SqlDumpParser {
       case _ => None
     }
 
-  /** Scan raw dump lines, grouping CREATE TABLE … ( … ) blocks; stops
-    * after `maxLines` (schemas live at the top of a dump — bounded work
-    * even on a 100 GB file).
+  /** The (table, columns) of each CREATE TABLE … ( … ) block in raw
+    * dump lines, lazily: a caller that stops early reads no further.
+    */
+  def createTables(lines: Iterator[String]): Iterator[(String, Seq[String])] = {
+    val block = ArrayBuffer.empty[String]
+    var inBlock = false
+    lines.flatMap { line =>
+      if (!inBlock && CreateTableRe.pattern.matcher(line).matches()) {
+        inBlock = true; block.clear(); block += line
+        None
+      } else if (inBlock) {
+        block += line
+        if (line.trim.startsWith(")")) { inBlock = false; parseCreateTable(block.toSeq) }
+        else None
+      } else None
+    }
+  }
+
+  /** Every table's columns in the first `maxLines` lines (schemas live
+    * at the top of a dump — bounded work even on a 100 GB file); the
+    * first block of a table wins.
     */
   def scanSchemas(lines: Iterator[String], maxLines: Int = 100000): Map[String, Seq[String]] = {
     val out = scala.collection.mutable.LinkedHashMap.empty[String, Seq[String]]
-    val block = ArrayBuffer.empty[String]
-    var inBlock = false
-    var n = 0
-    while (lines.hasNext && n < maxLines) {
-      val line = lines.next(); n += 1
-      if (!inBlock && CreateTableRe.pattern.matcher(line).matches()) {
-        inBlock = true; block.clear(); block += line
-      } else if (inBlock) {
-        block += line
-        if (line.trim.startsWith(")")) {
-          parseCreateTable(block.toSeq).foreach { case (t, cs) => out.getOrElseUpdate(t, cs) }
-          inBlock = false
-        }
-      }
-    }
+    createTables(lines.take(maxLines)).foreach { case (t, cs) => out.getOrElseUpdate(t, cs) }
     out.toMap
   }
 

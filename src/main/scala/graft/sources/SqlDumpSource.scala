@@ -1,26 +1,32 @@
 package graft.sources
 
 import graft.core.{Connector, SchemaInfer, WriteMode}
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, Encoders, Row, SaveMode, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SQLContext, SaveMode, SparkSession}
+import org.apache.spark.sql.sources.{BaseRelation, DataSourceRegister, RelationProvider, TableScan}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import java.io.{BufferedReader, InputStreamReader}
 import java.nio.charset.StandardCharsets
+import java.util.regex.Pattern
 import scala.jdk.CollectionConverters._
 
 /** `.sql`-dump source/sink (S15/S16) on Spark.
   *
-  * Read path — two passes, both bounded:
-  *  1. schema: driver streams the head of each file (CREATE TABLE blocks
-  *     sit before their INSERTs in a dump) through
-  *     [[SqlDumpParser.scanSchemas]], capped at `schemaScanLines` lines —
-  *     O(header) work regardless of file size;
+  * Read path — the one reader of the format, behind both
+  * [[SqlDumpConnector]] and `spark.read.format("sqldump")`
+  * ([[SqlDumpDataSource]]); it runs no Spark job before the first action:
+  *  1. columns: the driver streams the dump's files in listing order
+  *     (`ddl.sql` first) and stops at the first whose head
+  *     (`schemaScanLines` lines) holds the table's CREATE TABLE block —
+  *     CREATE blocks sit before their INSERTs, so this is O(header)
+  *     work. A dump with no such block takes the first statement into
+  *     the table instead: its column list, else positional `c0..cN`;
   *  2. data: `spark.read.textFile` (line-splittable → parallel over
-  *     HDFS-style splits), filter to `INSERT/REPLACE INTO <table>` lines,
-  *     parse each statement's multi-row VALUES in executors. One-statement
-  *     -per-line dumps (mysqldump's extended-insert default) parallelize
-  *     perfectly; statements spanning lines need `wholeFile=true`
-  *     (one partition per file — the format itself is unsplittable then).
+  *     HDFS-style splits, a large single-file dump included), filter to
+  *     `INSERT/REPLACE INTO <table>` lines, parse each statement's
+  *     multi-row VALUES in executors. Statements sit one per line
+  *     (mysqldump's extended-insert default).
   *
   * Write path: partitions render extended-INSERT statements of
   * `batchRows` rows ([[SqlDumpParser.renderInsert]]) and write as text;
@@ -28,6 +34,9 @@ import scala.jdk.CollectionConverters._
   * sidecar `ddl.sql` the reader's schema pass picks up first.
   */
 object SqlDumpSource {
+
+  /** Lines of each file's head searched for the table's CREATE block. */
+  private[sources] val SchemaScanLines = 100000
 
   /** Collect (path, fs) file list: a single file, or every data file in
     * a directory with `ddl.sql` first (schema priority).
@@ -44,40 +53,51 @@ object SqlDumpSource {
     } else Seq(p)
   }
 
-  /** Driver-side bounded schema scan. */
-  def scanSchemas(spark: SparkSession, path: String, schemaScanLines: Int = 100000): Map[String, Seq[String]] = {
+  /** Column layout of `table` from one driver pass over `files` (see
+    * the class doc). The first statement is taken from the scanned
+    * heads; only when none holds one are the files searched further.
+    */
+  private def columnsOf(spark: SparkSession, files: Seq[Path], table: String,
+      statement: Pattern, schemaScanLines: Int): Seq[String] = {
     val conf = spark.sparkContext.hadoopConfiguration
-    listFiles(spark, path).foldLeft(Map.empty[String, Seq[String]]) { (acc, f) =>
-      val fs = f.getFileSystem(conf)
-      val in = new BufferedReader(new InputStreamReader(fs.open(f), StandardCharsets.UTF_8))
-      try acc ++ SqlDumpParser.scanSchemas(in.lines().iterator().asScala, schemaScanLines)
-      finally in.close()
+    def withLines[T](f: Path)(body: Iterator[String] => Option[T]): Option[T] = {
+      val in = new BufferedReader(new InputStreamReader(f.getFileSystem(conf).open(f),
+        StandardCharsets.UTF_8))
+      try body(in.lines().iterator().asScala) finally in.close()
     }
-  }
-
-  /** Read one table out of a dump file/directory. */
-  def read(spark: SparkSession, path: String, table: String,
-           schemaScanLines: Int = 100000): DataFrame = {
-    import spark.implicits._
-    val created = scanSchemas(spark, path, schemaScanLines).get(table)
-    // compiled once and shipped in the closure (`String.matches` would
-    // recompile it for every line)
-    val prefix = java.util.regex.Pattern.compile(
-      s"""(?is)^\\s*(INSERT|REPLACE)\\s+(?:IGNORE\\s+)?INTO\\s+[`"]?${java.util.regex.Pattern.quote(table)}[`"]?[\\s(].*""")
-    val stmts = spark.read.textFile(listFiles(spark, path).map(_.toString): _*)
-      .filter(line => prefix.matcher(line).matches())
-    // Column layout: CREATE TABLE order, else the first statement's
-    // explicit column list, else positional c0..cN.
-    val columns: Seq[String] = created.getOrElse {
-      val first = stmts.take(1).headOption.flatMap(SqlDumpParser.parseInsert)
-      first.flatMap(_.columns).getOrElse {
-        val arity = first.map(_.rows.headOption.map(_.size).getOrElse(0)).getOrElse(0)
+    def isStatement(line: String) = statement.matcher(line).matches()
+    var first: Option[String] = None
+    val created = files.iterator.flatMap(f => withLines(f) { lines =>
+      val head = lines.take(schemaScanLines)
+        .tapEach(l => if (first.isEmpty && isStatement(l)) first = Some(l))
+      SqlDumpParser.createTables(head).collectFirst { case (`table`, cols) => cols }
+    }).nextOption()
+    created.getOrElse {
+      val stmt = first.orElse(files.iterator.flatMap(f => withLines(f)(_.find(isStatement))).nextOption())
+        .flatMap(SqlDumpParser.parseInsert)
+      stmt.flatMap(_.columns).getOrElse {
+        val arity = stmt.flatMap(_.rows.headOption).map(_.size).getOrElse(0)
         (0 until arity).map(i => s"c$i")
       }
     }
+  }
+
+  /** Schema and rows of one table of a dump file/directory: what
+    * [[read]] and the `sqldump` relation share.
+    */
+  private[sources] def scan(spark: SparkSession, path: String, table: String,
+      schemaScanLines: Int = SchemaScanLines): (StructType, RDD[Row]) = {
+    val files = listFiles(spark, path)
+    // compiled once and shipped in the closure (`String.matches` would
+    // recompile it for every line)
+    val statement = Pattern.compile(
+      s"""(?is)^\\s*(INSERT|REPLACE)\\s+(?:IGNORE\\s+)?INTO\\s+[`"]?${Pattern.quote(table)}[`"]?[\\s(].*""")
+    val columns = columnsOf(spark, files, table, statement, schemaScanLines)
     val schema = StructType(columns.map(StructField(_, StringType, nullable = true)))
     val nCols = columns.length
     val colIdx = columns.zipWithIndex.toMap
+    val stmts = spark.read.textFile(files.map(_.toString): _*)
+      .filter(line => statement.matcher(line).matches())
     val rows = stmts.rdd.flatMap { line =>
       SqlDumpParser.parseInsert(line).toSeq.flatMap { ins =>
         // statement-level column list remaps into CREATE order
@@ -94,6 +114,13 @@ object SqlDumpSource {
         }
       }
     }
+    (schema, rows)
+  }
+
+  /** Read one table out of a dump file/directory. */
+  def read(spark: SparkSession, path: String, table: String,
+           schemaScanLines: Int = SchemaScanLines): DataFrame = {
+    val (schema, rows) = scan(spark, path, table, schemaScanLines)
     spark.createDataFrame(rows, schema)
   }
 
@@ -152,11 +179,32 @@ final case class SqlDumpConnector(
       overwrite = true)
   }
 
-  def listIndexes(spark: SparkSession): Seq[String] = {
-    val p = new Path(root)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Nil
-    else fs.listStatus(p).toSeq.filter(s => s.getPath.getName.endsWith(".sql"))
-      .map(_.getPath.getName.stripSuffix(".sql")).sorted
+  def listIndexes(spark: SparkSession): Seq[String] = Listing.indexes(spark, root, ".sql")
+}
+
+/** The `sqldump` short name — [[SqlDumpSource]]'s reader as a relation:
+  *
+  * {{{
+  *   spark.read.format("sqldump")
+  *     .option("table", "users")            // which dump table to scan
+  *     .load("/path/to/dump-or-dir")
+  * }}}
+  */
+class SqlDumpDataSource extends RelationProvider with DataSourceRegister {
+
+  override def shortName(): String = "sqldump"
+
+  override def createRelation(
+      sqlContext: SQLContext, parameters: Map[String, String]): BaseRelation = {
+    def required(key: String): String = parameters.getOrElse(key,
+      throw new IllegalArgumentException(s"sqldump: option '$key' is required"))
+    val (dumpSchema, rows) =
+      SqlDumpSource.scan(sqlContext.sparkSession, required("path"), required("table"))
+    val sqlCtx = sqlContext
+    new BaseRelation with TableScan {
+      override def sqlContext: SQLContext = sqlCtx
+      override def schema: StructType = dumpSchema
+      override def buildScan(): RDD[Row] = rows
+    }
   }
 }

@@ -3,7 +3,6 @@ package graft.sources
 import graft.core.{Connector, WriteMode}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.charset.StandardCharsets
 import scala.collection.mutable.ArrayBuffer
@@ -32,9 +31,9 @@ import scala.collection.mutable.ArrayBuffer
   * BIFF reader); the READER does implement mini-FAT, because
   * real-world small files use it.
   *
-  * Scale shape: identical to [[XlsxSource]] — `binaryFile` read (the
-  * container is not splittable; parallelism = workbook count),
-  * `foreachPartition` write.
+  * Scale shape: identical to [[XlsxSource]] — read through
+  * `spark.read.format("xls")` (the container is not splittable;
+  * parallelism = workbook count), `foreachPartition` write.
   */
 object XlsSource {
 
@@ -559,28 +558,6 @@ object XlsSource {
     if (sheetRows.nonEmpty) flushSheet() // missing trailing EOF tolerance
     (header, data.toSeq)
   }
-
-  /** Distributed read over all workbooks under `path`; all-string
-    * schema from the path-ordered FIRST workbook's header (deterministic
-    * across runs, matching the DSv2 WorkbookScan's listing order; other
-    * workbooks' rows are padded/truncated to that header's width).
-    */
-  def read(spark: SparkSession, path: String): DataFrame = {
-    val bin = spark.read.format("binaryFile").load(
-      if (path.endsWith(".xls")) path else s"$path/*.xls")
-      .select("path", "content")
-    val first = bin.orderBy("path").limit(1).collect().headOption
-      .map(_.getAs[Array[Byte]]("content"))
-      .getOrElse(throw new IllegalArgumentException(s"no workbooks at $path"))
-    val header = parseWorkbook(first)._1
-    val schema = StructType(header.map(StructField(_, StringType, nullable = true)))
-    val n = header.length
-    val rows = bin.rdd.flatMap { r =>
-      parseWorkbook(r.getAs[Array[Byte]]("content"))._2.iterator
-        .map(vals => Row.fromSeq(vals.padTo(n, null).take(n)))
-    }
-    spark.createDataFrame(rows, schema)
-  }
 }
 
 /** Registry connector: `root/<index>.xls` (directory of per-partition
@@ -590,14 +567,8 @@ final case class XlsConnector(name: String, root: String, rolloverRows: Int = 65
     extends Connector {
   private def pathFor(index: String): String = s"$root/$index.xls"
   def read(spark: SparkSession, index: String): DataFrame =
-    XlsSource.read(spark, pathFor(index))
+    spark.read.format("xls").load(pathFor(index))
   def write(df: DataFrame, index: String, mode: WriteMode): Unit =
     XlsSource.write(df, pathFor(index), rolloverRows)
-  def listIndexes(spark: SparkSession): Seq[String] = {
-    val p = new Path(root)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Nil
-    else fs.listStatus(p).toSeq.map(_.getPath.getName)
-      .filter(_.endsWith(".xls")).map(_.stripSuffix(".xls")).sorted
-  }
+  def listIndexes(spark: SparkSession): Seq[String] = Listing.indexes(spark, root, ".xls")
 }

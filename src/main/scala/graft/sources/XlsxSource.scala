@@ -2,8 +2,7 @@ package graft.sources
 
 import graft.core.{Connector, WriteMode}
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import java.io.ByteArrayInputStream
 import java.nio.charset.StandardCharsets
 import java.util.zip.{ZipEntry, ZipInputStream, ZipOutputStream}
@@ -20,9 +19,9 @@ import scala.jdk.CollectionConverters._
   * and XML-illegal control characters scrubbed.
   *
   * Scale shape: one workbook per input partition on write (parallel,
-  * no driver materialization); read parallelism = number of workbook
-  * files (`binaryFile`, like [[ZipSource]] — the container format is
-  * not splittable).
+  * no driver materialization); read through `spark.read.format("xlsx")`
+  * ([[graft.sources.v2.PerFileDataSource]]), parallelism = number of
+  * workbook files (the container format is not splittable).
   */
 object XlsxSource {
 
@@ -204,26 +203,6 @@ object XlsxSource {
     }
     (header, data.toSeq)
   }
-
-  /** Distributed read over all workbooks under `path`. All-string
-    * schema from the first workbook's header (first-row typing parity).
-    */
-  def read(spark: SparkSession, path: String): DataFrame = {
-    val bin = spark.read.format("binaryFile").load(
-      if (path.endsWith(".xlsx")) path else s"$path/*.xlsx")
-      .select("content")
-    val first = bin.limit(1).collect().headOption
-      .map(_.getAs[Array[Byte]]("content"))
-      .getOrElse(throw new IllegalArgumentException(s"no workbooks at $path"))
-    val header = parseWorkbook(first)._1
-    val schema = StructType(header.map(StructField(_, StringType, nullable = true)))
-    val n = header.length
-    val rows = bin.rdd.flatMap { r =>
-      parseWorkbook(r.getAs[Array[Byte]]("content"))._2.iterator
-        .map(vals => Row.fromSeq(vals.padTo(n, null).take(n)))
-    }
-    spark.createDataFrame(rows, schema)
-  }
 }
 
 /** Registry connector: `root/<index>.xlsx` (a directory of per-partition
@@ -233,14 +212,8 @@ final case class XlsxConnector(name: String, root: String, rolloverRows: Int = 5
     extends Connector {
   private def pathFor(index: String): String = s"$root/$index.xlsx"
   def read(spark: SparkSession, index: String): DataFrame =
-    XlsxSource.read(spark, pathFor(index))
+    spark.read.format("xlsx").load(pathFor(index))
   def write(df: DataFrame, index: String, mode: WriteMode): Unit =
     XlsxSource.write(df, pathFor(index), rolloverRows)
-  def listIndexes(spark: SparkSession): Seq[String] = {
-    val p = new Path(root)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Nil
-    else fs.listStatus(p).toSeq.map(_.getPath.getName)
-      .filter(_.endsWith(".xlsx")).map(_.stripSuffix(".xlsx")).sorted
-  }
+  def listIndexes(spark: SparkSession): Seq[String] = Listing.indexes(spark, root, ".xlsx")
 }

@@ -2,73 +2,60 @@ package graft.sources
 
 import graft.core.{Connector, WriteMode}
 import com.univocity.parsers.csv.{CsvParser, CsvParserSettings}
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.io.ByteArrayInputStream
 import java.nio.charset.StandardCharsets
 import java.util.zip.ZipInputStream
+import scala.collection.immutable.ArraySeq
+import scala.jdk.CollectionConverters._
+
+/** The CSV members of one archive as one table, shared by [[ZipSource]]
+  * and [[RarSource]]: the header is the first member's first row, every
+  * member's own header row is dropped and the rest concatenate. Members
+  * named `*.csv` (any case) count; CSV parsing uses the univocity parser
+  * Spark's csv source builds on.
+  */
+private[sources] object CsvMembers {
+  def isCsv(name: String): Boolean = name.toLowerCase.endsWith(".csv")
+
+  def table(bodies: Iterator[Array[Byte]]): (Seq[String], Seq[Seq[String]]) = {
+    var header: Option[Seq[String]] = None
+    val rows = Seq.newBuilder[Seq[String]]
+    bodies.foreach { body =>
+      val settings = new CsvParserSettings()
+      settings.setLineSeparatorDetectionEnabled(true)
+      settings.setMaxCharsPerColumn(1 << 20)
+      val parsed = new CsvParser(settings)
+        .parseAll(new ByteArrayInputStream(body), StandardCharsets.UTF_8).asScala
+      if (parsed.nonEmpty) {
+        if (header.isEmpty) header = Some(ArraySeq.unsafeWrapArray(parsed.head))
+        parsed.iterator.drop(1).foreach(r => rows += ArraySeq.unsafeWrapArray(r))
+      }
+    }
+    (header.getOrElse(Nil), rows.result())
+  }
+}
 
 /** Zip-archive source (S17): archives of CSV members become one table
-  * per zip, members concatenated.
+  * per zip, members concatenated ([[CsvMembers]]); read through
+  * `spark.read.format("zip")` ([[graft.sources.v2.PerFileDataSource]]).
   *
-  * Scale shape: `binaryFile` gives one row per archive, so parallelism =
-  * number of archives; member decompression and CSV parsing run in
-  * executors via `flatMap` (zip is not splittable — the per-archive
-  * granularity is inherent to the format, exactly why a 100 TB corpus
-  * should land as many medium archives, not one). CSV parsing uses the
-  * same univocity parser Spark's csv source builds on. The reference's
-  * pluggable `get_file_data_func` analog is the `memberFilter`.
+  * Scale shape: one input partition per archive, member decompression
+  * and CSV parsing in executors (zip is not splittable — the
+  * per-archive granularity is inherent to the format, exactly why a
+  * 100 TB corpus should land as many medium archives, not one).
   */
 object ZipSource {
 
-  /** Header (from the first member's first row) → schema; all strings,
-    * cast downstream (first-row typing parity with the reference).
-    */
-  def read(
-      spark: SparkSession,
-      path: String,
-      memberFilter: String => Boolean = _.toLowerCase.endsWith(".csv"),
-  ): DataFrame = {
-    val bin = spark.read.format("binaryFile").load(path)
-      .select("path", "content")
-
-    def parseMembers(content: Array[Byte]): Iterator[(String, Array[Array[String]])] = {
-      val zin = new ZipInputStream(new ByteArrayInputStream(content), StandardCharsets.UTF_8)
-      Iterator.continually(zin.getNextEntry).takeWhile(_ != null)
-        .filter(e => !e.isDirectory && memberFilter(e.getName))
-        .map { e =>
-          // read the entry body first: univocity closes the stream it
-          // parses, which would kill the ZipInputStream mid-archive
-          val body = zin.readAllBytes()
-          val settings = new CsvParserSettings()
-          settings.setLineSeparatorDetectionEnabled(true)
-          settings.setMaxCharsPerColumn(1 << 20)
-          val rows = new CsvParser(settings)
-            .parseAll(new ByteArrayInputStream(body), StandardCharsets.UTF_8)
-          e.getName -> rows.toArray(Array.empty[Array[String]])
-        }
-    }
-
-    // Schema pass: first matching member's header (driver, one archive).
-    val firstContent = bin.limit(1).collect().headOption
-      .map(_.getAs[Array[Byte]]("content"))
-      .getOrElse(throw new IllegalArgumentException(s"no archives at $path"))
-    val header = parseMembers(firstContent)
-      .flatMap { case (_, rows) => rows.headOption }
-      .toSeq.headOption
-      .getOrElse(throw new IllegalArgumentException(s"no CSV members in $path"))
-    val schema = StructType(header.map(c => StructField(c, StringType, nullable = true)))
-    val nCols = header.length
-
-    val rowsRdd = bin.rdd.flatMap { r =>
-      parseMembers(r.getAs[Array[Byte]]("content")).flatMap { case (_, rows) =>
-        rows.iterator.drop(1).map { vals => // drop each member's header
-          Row.fromSeq(vals.padTo(nCols, null).take(nCols).toSeq)
-        }
-      }
-    }
-    spark.createDataFrame(rowsRdd, schema)
+  /** One archive → (header, rows) of its CSV members. */
+  def parse(content: Array[Byte]): (Seq[String], Seq[Seq[String]]) = {
+    val zin = new ZipInputStream(new ByteArrayInputStream(content), StandardCharsets.UTF_8)
+    // each body is read before the next entry is opened: univocity
+    // closes the stream it parses, which would kill the ZipInputStream
+    // mid-archive
+    CsvMembers.table(Iterator.continually(zin.getNextEntry).takeWhile(_ != null)
+      .filter(e => !e.isDirectory && CsvMembers.isCsv(e.getName))
+      .map(_ => zin.readAllBytes()))
   }
 }
 
@@ -77,14 +64,8 @@ object ZipSource {
   */
 final case class ZipConnector(name: String, root: String) extends Connector {
   def read(spark: SparkSession, index: String): DataFrame =
-    ZipSource.read(spark, s"$root/$index.zip")
+    spark.read.format("zip").load(s"$root/$index.zip")
   def write(df: DataFrame, index: String, mode: WriteMode): Unit =
     throw new UnsupportedOperationException("zip connector is scan-only (S17)")
-  def listIndexes(spark: SparkSession): Seq[String] = {
-    val p = new Path(root)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Nil
-    else fs.listStatus(p).toSeq.map(_.getPath.getName)
-      .filter(_.endsWith(".zip")).map(_.stripSuffix(".zip")).sorted
-  }
+  def listIndexes(spark: SparkSession): Seq[String] = Listing.indexes(spark, root, ".zip")
 }

@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graft.Bridge
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
@@ -11,6 +13,19 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** Spark jobs started while `body` runs, counted off a drained bus. */
+  def jobsOf(body: => Unit): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    Bridge.waitListenerBusEmpty(spark.sparkContext, 60000L)
+    spark.sparkContext.addSparkListener(l)
+    try { body; Bridge.waitListenerBusEmpty(spark.sparkContext, 60000L) }
+    finally spark.sparkContext.removeSparkListener(l)
+    jobs.get()
+  }
 }
 
 object SparkSpec {

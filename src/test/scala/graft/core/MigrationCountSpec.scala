@@ -3,10 +3,8 @@ package graft.core
 import graft.SparkSpec
 import graft.sources.{EsConnector, GridFsConnector, MongoConnector, SqlDumpConnector,
   XlsConnector, XlsxConnector}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.Bridge
 
 /** `MigrationJob.runOne` counts the rows it sends while the sink writes
   * them: for every writable connector and write mode, the count equals
@@ -86,11 +84,18 @@ class MigrationCountSpec extends SparkSpec {
     check(derby, "t_ign", ignore)
     keyedSeed("t_rep")
     check(derby, "t_rep", replace)
-    // auto-created tables (ensureTable) get no key on Derby: its
-    // unquoted ADD PRIMARY KEY misses Spark's quoted lowercase columns,
-    // so these steps send one partition
-    check(derby, "t_new_ign", ignore, rows = batch.coalesce(1))
-    check(derby, "t_new_rep", replace, rows = batch.coalesce(1))
+    // auto-created tables (ensureTable) carry the key too
+    check(derby, "t_new_ign", ignore)
+    check(derby, "t_new_rep", replace)
+    Seq("T_NEW_IGN", "T_NEW_REP").foreach { t =>
+      val conn = java.sql.DriverManager.getConnection(url)
+      try {
+        val rs = conn.getMetaData.getPrimaryKeys(null, null, t)
+        val key = Iterator.continually(rs).takeWhile(_.next()).map(_.getString("COLUMN_NAME")).toList
+        rs.close()
+        assert(key == List("id"), s"$t primary key")
+      } finally conn.close()
+    }
   }
 
   test("dump, document and workbook sinks count what they are sent") {
@@ -125,19 +130,6 @@ class MigrationCountSpec extends SparkSpec {
     val src = MemConnector("src")
     src.put("t", batch)
     assert(MigrationJob(src, pq, none, mode = ow).runOne(spark, "t", "t") == 0L)
-  }
-
-  /** Spark jobs started while `body` runs, counted off a drained bus. */
-  private def jobsOf(body: => Unit): Int = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
-    }
-    Bridge.waitListenerBusEmpty(spark.sparkContext, 60000L)
-    spark.sparkContext.addSparkListener(l)
-    try { body; Bridge.waitListenerBusEmpty(spark.sparkContext, 60000L) }
-    finally spark.sparkContext.removeSparkListener(l)
-    jobs.get()
   }
 
   test("parquet→parquet runOne runs only the jobs of its write") {

@@ -67,7 +67,7 @@ class RoundTripPropSpec extends SparkSpec {
       val dir = tmpDir("rt-dump")
       val df = rows.toDF("id", "s", "d", "b")
       SqlDumpSource.write(df, s"$dir/t.sql", "t", batchRows = 7)
-      val back = SqlDumpSource.read(spark, s"$dir/t.sql", "t")
+      val back = spark.read.format("sqldump").option("table", "t").load(s"$dir/t.sql")
         .select($"id".cast("long"), $"s", $"d".cast("double"),
           ($"b" === "1" || $"b" === "true").as("b"))
         .as[(Long, String, Double, Boolean)].collect()

@@ -78,7 +78,7 @@ class EmulatedStoresSpec extends SparkSpec {
       "part1.csv" -> "id,name\n1,alice\n2,\"bob, jr\"\n",
       "part2.csv" -> "id,name\n3,\"say \"\"hi\"\"\"\n",
       "notes.txt" -> "ignored non-csv member")
-    val df = ZipSource.read(spark, s"$dir/t.zip")
+    val df = spark.read.format("zip").load(s"$dir/t.zip")
     assert(df.columns.toSeq == Seq("id", "name"))
     val rows = df.orderBy($"id").as[(String, String)].collect().toSeq
     assert(rows == Seq(("1", "alice"), ("2", "bob, jr"), ("3", "say \"hi\"")))

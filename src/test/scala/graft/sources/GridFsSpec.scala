@@ -91,4 +91,18 @@ class GridFsSpec extends SparkSpec {
     assert(c.listIndexes(spark) == Seq("b1", "b2"))
     assert(c.read(spark, "b1").count() == 2)
   }
+
+  test("an upload evaluates each source row once") {
+    val evaluated = spark.sparkContext.longAccumulator("gridfs-source-rows")
+    val touch = udf { (_: String) => evaluated.add(1); true }.asNondeterministic()
+    val src = (1 to 6).map(i => (s"f$i.bin", bytes(i * 5, i))).toDF("filename", "content")
+      .repartition(2).filter(touch($"filename"))
+    val c = GridFsConnector("gridfs", tmpDir("gridfs-once"), chunkSize = 8)
+    c.write(src, "b", WriteMode.Overwrite)
+    assert(evaluated.sum == 6L)
+    c.write(src, "b", WriteMode.Append)
+    assert(evaluated.sum == 12L)
+    assert(src.storageLevel == org.apache.spark.storage.StorageLevel.NONE) // released after upload
+    assert(c.read(spark, "b").count() == 6)
+  }
 }

@@ -16,7 +16,7 @@ class XlsSpec extends SparkSpec {
       (4L, null.asInstanceOf[String], 9.75, false),
     ).toDF("id", "name", "score", "flag")
     XlsSource.write(df, s"$dir/t.xls")
-    val back = XlsSource.read(spark, s"$dir/t.xls")
+    val back = spark.read.format("xls").load(s"$dir/t.xls")
     assert(back.columns.toSeq == Seq("id", "name", "score", "flag"))
     val rows = back
       .select($"id".cast("long"), $"name", $"score".cast("double"), $"flag".cast("boolean"))
@@ -38,7 +38,7 @@ class XlsSpec extends SparkSpec {
     val (_, rows) = XlsSource.parseWorkbook(
       java.nio.file.Files.readAllBytes(files.head.toPath))
     assert(rows.length == 25)
-    val back = XlsSource.read(spark, s"$dir/t.xls")
+    val back = spark.read.format("xls").load(s"$dir/t.xls")
     assert(back.select($"id".cast("long")).as[Long].collect().sorted.toSeq == (1L to 25L))
   }
 
@@ -48,7 +48,7 @@ class XlsSpec extends SparkSpec {
     XlsSource.write(df, s"$dir/t.xls")
     val files = new java.io.File(s"$dir/t.xls").listFiles().filter(_.getName.endsWith(".xls"))
     assert(files.length == 4)
-    assert(XlsSource.read(spark, s"$dir/t.xls").count() == 40)
+    assert(spark.read.format("xls").load(s"$dir/t.xls").count() == 40)
   }
 
   test("SST CONTINUE: workbook with >8224 bytes of strings round-trips, incl. one giant string") {
@@ -58,7 +58,7 @@ class XlsSpec extends SparkSpec {
     val vals = (1 to 2000).map(i => (i.toLong, if (i == 1000) giant else s"string-value-$i"))
     val dir = tmpDir("xls-sst")
     XlsSource.write(vals.toDF("id", "v").coalesce(1), s"$dir/t.xls")
-    val back = XlsSource.read(spark, s"$dir/t.xls")
+    val back = spark.read.format("xls").load(s"$dir/t.xls")
       .select($"id".cast("long"), $"v").as[(Long, String)].collect().sortBy(_._1)
     assert(back.length == 2000)
     assert(back(999)._2 == giant)
@@ -159,16 +159,32 @@ class XlsSpec extends SparkSpec {
   }
 
   test("read schema comes from the path-ordered first workbook (deterministic header)") {
-    val dir = new java.io.File(tmpDir("xls-order") + "/t.xls")
-    dir.mkdirs()
-    def put(name: String, header: Seq[String]): Unit =
-      java.nio.file.Files.write(new java.io.File(dir, name).toPath,
-        XlsSource.xlsBytes(header, Iterator(Seq("1", "2")), 65535))
-    put("b-second.xls", Seq("zcol1", "zcol2"))
-    put("a-first.xls", Seq("acol1", "acol2"))
-    val back = XlsSource.read(spark, dir.toString)
-    assert(back.columns.toSeq == Seq("acol1", "acol2"))
-    assert(back.count() == 2)
+    // every per-file format: the file written second sorts first and wins
+    def csv(header: Seq[String]) = header.mkString(",") + "\n1,2\n"
+    def zip(header: Seq[String]): Array[Byte] = {
+      val bos = new java.io.ByteArrayOutputStream()
+      val z = new java.util.zip.ZipOutputStream(bos)
+      z.putNextEntry(new java.util.zip.ZipEntry("m.csv"))
+      z.write(csv(header).getBytes("UTF-8"))
+      z.close()
+      bos.toByteArray
+    }
+    val formats: Seq[(String, Seq[String] => Array[Byte])] = Seq(
+      "xls" -> (h => XlsSource.xlsBytes(h, Iterator(Seq("1", "2")), 65535)),
+      "xlsx" -> (h => XlsxSource.workbookBytes(h, Iterator(Seq("1", "2")), 500000)),
+      "zip" -> zip,
+      "rar" -> (h => RarFixture.makeRar("m.csv" -> csv(h))))
+    formats.foreach { case (ext, bytes) =>
+      val dir = new java.io.File(tmpDir(s"$ext-order") + s"/t.$ext")
+      dir.mkdirs()
+      def put(name: String, header: Seq[String]): Unit =
+        java.nio.file.Files.write(new java.io.File(dir, name).toPath, bytes(header))
+      put(s"b-second.$ext", Seq("zcol1", "zcol2"))
+      put(s"a-first.$ext", Seq("acol1", "acol2"))
+      val back = spark.read.format(ext).load(dir.toString)
+      assert(back.columns.toSeq == Seq("acol1", "acol2"), ext)
+      assert(back.count() == 2, ext)
+    }
   }
 
   test("XlsConnector registry protocol") {

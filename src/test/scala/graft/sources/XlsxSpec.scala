@@ -16,7 +16,7 @@ class XlsxSpec extends SparkSpec {
       (4L, null.asInstanceOf[String], 9.75, false),
     ).toDF("id", "name", "score", "flag")
     XlsxSource.write(df, s"$dir/t.xlsx")
-    val back = XlsxSource.read(spark, s"$dir/t.xlsx")
+    val back = spark.read.format("xlsx").load(s"$dir/t.xlsx")
     assert(back.columns.toSeq == Seq("id", "name", "score", "flag"))
     val rows = back
       .select($"id".cast("long"), $"name", $"score".cast("double"), $"flag".cast("boolean"))
@@ -39,7 +39,7 @@ class XlsxSpec extends SparkSpec {
     val (_, rows) = XlsxSource.parseWorkbook(
       java.nio.file.Files.readAllBytes(files.head.toPath))
     assert(rows.length == 25)
-    val back = XlsxSource.read(spark, s"$dir/t.xlsx")
+    val back = spark.read.format("xlsx").load(s"$dir/t.xlsx")
     assert(back.count() == 25)
     assert(back.select($"id".cast("long")).as[Long].collect().sorted.toSeq == (1L to 25L))
   }
@@ -50,7 +50,7 @@ class XlsxSpec extends SparkSpec {
     XlsxSource.write(df, s"$dir/t.xlsx")
     val files = new java.io.File(s"$dir/t.xlsx").listFiles().filter(_.getName.endsWith(".xlsx"))
     assert(files.length == 4)
-    val back = XlsxSource.read(spark, s"$dir/t.xlsx")
+    val back = spark.read.format("xlsx").load(s"$dir/t.xlsx")
     assert(back.count() == 40)
   }
 
@@ -58,7 +58,7 @@ class XlsxSpec extends SparkSpec {
     val dir = tmpDir("xlsx-ctrl")
     val df = Seq((1L, "badctrlhere")).toDF("id", "v")
     XlsxSource.write(df, s"$dir/t.xlsx")
-    val v = XlsxSource.read(spark, s"$dir/t.xlsx").select("v").as[String].head()
+    val v = spark.read.format("xlsx").load(s"$dir/t.xlsx").select("v").as[String].head()
     assert(v == "bad ctrl here")
   }
 
