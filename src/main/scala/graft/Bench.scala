@@ -81,7 +81,37 @@ object Bench {
 
   private def recordText(record: String): String =
     try java.nio.file.Files.readString(java.nio.file.Paths.get(s"/root/repo/$record"))
-    catch { case _: Throwable => "" }
+    catch {
+      case _: java.nio.file.NoSuchFileException => ""
+      case NonFatal(e) =>
+        System.err.println(s"[bench] $record unreadable: ${describe(e)}"); ""
+    }
+
+  /** The sf dir and master the canonical local record is measured at. */
+  private val CanonicalSfDir = "/root/testdata/sf0.1"
+  private val CanonicalMaster = "local[32]"
+
+  /** Why this run must NOT replace its canonical record, or None when
+    * it may: a filtered run, a sweep over a scale fixture (sf1/sf10
+    * live in their own BENCH_SF* records; round 9 lost the record to an
+    * sf10 sweep) and a local run at another core count (a `local[8]`
+    * run once replaced the `local[32]` record) all measure something
+    * else. A contaminated run only ever BOOTSTRAPS a missing record
+    * (round 16): better a flagged record than none, since the requeue
+    * defense needs SOME baseline. `sfRealPath` is the sf dir with
+    * symlinks and relative spelling resolved.
+    */
+  private[graft] def persistRefusal(only: Option[Seq[String]], sfRealPath: String,
+      master: String, isCluster: Boolean, contaminated: Boolean,
+      recordExists: Boolean): Option[String] =
+    if (only.nonEmpty) Some(s"filtered run (${only.get.mkString(",")})")
+    else if (sfRealPath != CanonicalSfDir)
+      Some(s"non-canonical sf dir $sfRealPath (canonical record is sf0.1 only)")
+    else if (!isCluster && master != CanonicalMaster)
+      Some(s"master $master (the local record is $CanonicalMaster only)")
+    else if (contaminated && recordExists)
+      Some("contaminated run (stall not rescued / broad noise) — canonical record kept")
+    else None
 
   /** Host-speed scale for probe normalization (round-15 verdict task 4):
     * `time_normalized = time_raw * refProbeMedian / runProbeMedian`.
@@ -187,64 +217,35 @@ object Bench {
     // so codegen/session costs don't land on the first measured query.
     Tables.All.foreach { t =>
       try Tables.load(spark, sfDir, t).limit(1).count()
-      catch { case _: Throwable => }
+      catch { case NonFatal(e) => System.err.println(s"[bench] warm-up of $t failed: ${describe(e)}") }
     }
     Tables.load(spark, sfDir, "lineitem")
       .groupBy("l_returnflag").agg(count(lit(1))).count()
 
-    // Shared-cache warm-up: the shingle index and the df-capped pair
-    // table are session-wide cache entries read by many queries; left
-    // cold, the FIRST query to touch one is billed its whole build, so
-    // per-query numbers flap with run order (r7 saw the q24-q29 block
-    // move 3-5x in both directions when q20 left the sequence). Build
-    // them up front and report the cost as its own line item — the
-    // per-query numbers then measure steady state.
+    // Shared-artifact warm-up: every session-shared artifact declared
+    // in graft.operators.Artifacts is built before the first probe, so
+    // per-query numbers measure steady state; the walk's wall is its
+    // own line item and each artifact's build is itemized in the full
+    // record. A failed build is reported and left to its first
+    // consumer.
     val tCache0 = System.nanoTime()
-    // The eight artifact families are mutually independent (each builds
-    // its own pins/caches; dependent steps stay INSIDE their family
-    // call), so they warm concurrently from a small pool (guide §2.6 —
-    // overlap independent jobs): the builds are chains of small stages
-    // that individually leave most cores idle, and the sequential form
-    // measured ~2x the wall of the overlapped one. Per-query timing is
-    // untouched — the warm-up still completes before the first probe,
-    // and its cost still lands in shared_cache_sec.
-    // CONTRACT (round-18 ADVICE): warm functions share ONE session
-    // concurrently, so they must not mutate session conf or other
-    // session-global state — a conf-setting path (ManifestColumns,
-    // CatalogOps) must derive a private newSession() the way q139
-    // does, never flip the shared session's flags.
-    locally {
-      val warms: Seq[() => Unit] = Seq(
-        () => graft.operators.TextDedup.warmSharedCaches(spark, sfDir),
-        () => graft.operators.CorpusOps.warmSharedModel(spark, sfDir),
-        () => graft.operators.CorpusOps.warmAnnArtifacts(spark, sfDir),
-        // the lazily-pinned text indexes (round 10): without these the
-        // build cost hides in a first iteration min-of-3 strips — in no
-        // reported number at all, which is worse than mis-attribution
-        () => graft.operators.SpanOps.warmSpanIndex(spark, sfDir),
-        () => graft.operators.TextAnalysis.warmTextrankEdges(spark, sfDir),
-        () => graft.operators.CorpusOps.warmVocabIndex(spark, sfDir),
-        () => graft.operators.CorpusOps.warmDsirFeatures(spark, sfDir),
-        () => graft.operators.StorageOps.warmBucketed(spark, sfDir),
-        () => graft.operators.StorageOps.warmLayouts(spark, sfDir))
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-      // Swallow only NonFatal warm-up failures, and say so (round-18
-      // ADVICE): a fatal cause (OOM, interrupt) must crash the run
-      // loudly, and a silently skipped warm family would re-attribute
-      // its build cost to an innocent query.
-      try warms
-        .map(w => pool.submit(new Runnable { def run(): Unit = w() }))
-        .foreach { f =>
-          try f.get()
-          catch {
-            case e: java.util.concurrent.ExecutionException
-                if e.getCause != null && scala.util.control.NonFatal(e.getCause) =>
-              System.err.println(s"[bench] warm-up failure swallowed: ${e.getCause}")
-          }
-        }
-      finally pool.shutdown()
-    }
+    val sharedItems = graft.operators.Artifacts.walk(spark, sfDir)
     val sharedCacheSec = (System.nanoTime() - tCache0) / 1e9
+    sharedItems.foreach {
+      case (n, graft.operators.Artifacts.Failed(e)) =>
+        System.err.println(s"[bench] artifact $n failed: ${describe(e)}")
+      case (n, graft.operators.Artifacts.Skipped(reads)) =>
+        System.err.println(s"[bench] artifact $n skipped: it reads failed ${reads.mkString(", ")}")
+      case _ =>
+    }
+    // per-artifact build seconds; a failed or skipped build reads -1,
+    // as a failed query does. Full record and stderr only: the stdout
+    // lines must fit the driver's output tail.
+    val itemsJson = sharedItems.map {
+      case (n, graft.operators.Artifacts.Built(sec)) => "\"" + n + "\":" + "%.3f".format(sec)
+      case (n, _) => "\"" + n + "\":-1"
+    }.mkString("{", ",", "}")
+    System.err.println(s"[bench] shared_cache_items $itemsJson")
 
     // Calibration probe: a constant-work, shuffle-free, plan-stable agg.
     // 20M longs across 32 slices keeps all executor threads busy for
@@ -450,35 +451,29 @@ object Bench {
         s""""master":"$master","iters":$iters,$requeuedJson,""" +
         s""""probe_scale":${"%.3f".format(scale)},"value_normalized":$totalNorm,""" +
         s""""shared_cache_sec":${"%.3f".format(sharedCacheSec)},""" +
+        (if (full) s""""shared_cache_items":$itemsJson,""" else "") +
         s""""probe":$probeJson,"host_noise":${"%.2f".format(hostNoise)},""" +
         s""""pin_reclaimed_bytes":${graft.core.Pin.reclaimedBytes},""" +
         s""""noisy_queries":$noisy,$failedJson,$skippedJson,"contaminated":$contaminated}"""
     }
-    // only persist full-catalog runs at the CANONICAL sf0.1 dir — a
-    // filtered run, or a full sweep over a scale fixture (sf1/sf10
-    // live in their own BENCH_SF* records), must not clobber the
-    // canonical local bench record (round 9 lost it to an sf10 sweep).
-    // Canonicalize before comparing (trailing slash / symlink /
-    // relative spelling must not silently stop persistence), and say
-    // on stderr when a full run is NOT persisted and why.
+    // Canonicalize the sf dir before comparing (trailing slash /
+    // symlink / relative spelling must not silently stop persistence),
+    // and say on stderr when a run is NOT persisted and why.
     val canonicalSf = try {
       java.nio.file.Paths.get(sfDir).toRealPath().toString
-    } catch { case _: Throwable => sfDir }
+    } catch {
+      case _: java.nio.file.NoSuchFileException => sfDir
+      case NonFatal(e) =>
+        System.err.println(s"[bench] cannot resolve $sfDir: ${describe(e)}"); sfDir
+    }
     val record = if (isCluster) "BENCH_CLUSTER.json" else "BENCH_LOCAL.json"
-    // the canonical record is only ever REPLACED by an uncontaminated
-    // run (round 16) — a contaminated one may still bootstrap a missing
-    // record (better a flagged record than none: the requeue defense
-    // needs SOME baseline)
-    val recordUsable = !contaminated || recText.isEmpty
-    if (only.isEmpty && canonicalSf == "/root/testdata/sf0.1" && recordUsable)
+    val refusal = persistRefusal(only, canonicalSf, master, isCluster, contaminated,
+      recordExists = recText.nonEmpty)
+    if (refusal.isEmpty)
       try java.nio.file.Files.writeString(java.nio.file.Paths.get(s"/root/repo/$record"),
         render(identity, "%.4f", full = true) + "\n")
       catch { case NonFatal(e) => System.err.println(s"[bench] $record not written: ${describe(e)}") }
-    else System.err.println(
-      s"[bench] $record not updated: " +
-        (if (only.nonEmpty) s"filtered run (${only.get.mkString(",")})"
-         else if (!recordUsable) "contaminated run (stall not rescued / broad noise) — canonical record kept"
-         else s"non-canonical sf dir $canonicalSf (canonical record is sf0.1 only)"))
+    else System.err.println(s"[bench] $record not updated: ${refusal.get}")
     println(render(_.takeWhile(_ != '_'), "%.3f", full = false))
     // compact summary LAST so the driver's 2000-char output tail always
     // holds one parseable line (see compactSummaryLine's scaladoc)

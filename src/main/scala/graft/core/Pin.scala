@@ -25,8 +25,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * re-reads identical bytes, so pinned partition ids, pair lists and
   * model rows cannot drift or vanish mid-job, and repeated calls in
   * one session (Bench iterations, multi-consumer funnels) reuse the
-  * artifact instead of re-deriving it (the `fitMemo` /
-  * `warmSharedCaches` discipline).
+  * artifact instead of re-deriving it (the `fitMemo` discipline;
+  * the session-shared pins are declared in
+  * [[graft.operators.Artifacts]]).
   *
   * Path semantics go through the Hadoop [[FileSystem]] API resolved
   * from the session's Hadoop conf for writing, pruning and the
@@ -278,7 +279,7 @@ object Pin {
   private val reclaimed = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** Bytes reclaimed by [[retireArtifact]] this JVM — surfaced in the
-    * Bench / CacheItemize JSON so the loop-round retention's win is a
+    * Bench record so the loop-round retention's win is a
     * reported number, not a claim.
     */
   def reclaimedBytes: Long = reclaimed.get()

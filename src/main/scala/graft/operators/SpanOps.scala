@@ -76,16 +76,9 @@ object SpanOps {
     * q119's broadcast side each run instead of re-running the distinct
     * over the span index (round 19, the evalShinglePin pattern).
     */
-  private def evalGramsPin(spark: SparkSession, dir: String): DataFrame =
+  private[operators] def evalGramsPin(spark: SparkSession, dir: String): DataFrame =
     graft.core.Pin.shared(spark, s"evgrams5-${graft.core.Pin.tag(dir)}")(
       grams(spark, dir).filter(col("doc_id") < 20).select(col("gram")).distinct())
-
-  /** The (doc_id, pos, 5-gram) span index (q92/q117-q119/q146). */
-  def warmSpanIndex(spark: SparkSession, dir: String): Unit = {
-    grams(spark, dir).count()
-    evalGramsPin(spark, dir).count()
-    ()
-  }
 
   /** Maximal disjoint covered intervals from qualifying gram starts.
     * Islands via the classic gaps-and-islands trick: consecutive

@@ -23,8 +23,8 @@ import org.apache.spark.sql.functions._
   * bucketed, and one present when the same join reads the raw
   * parquet.
   *
-  * The bucketed copies are a session-shared build (the
-  * `warmSharedCaches` discipline): first use writes them under
+  * The bucketed copies are a session-shared build (declared in
+  * [[Artifacts]]): first use writes them under
   * `target/graft-bucketed/<tag>/`, Bench's warm-up pre-builds so
   * per-query numbers measure the steady state a real deployment
   * lives in.
@@ -113,10 +113,6 @@ object StorageOps {
       }
       (li, ord)
     }
-
-  /** Bench warm-up hook — see [[graft.Bench]]'s shared-cache pass. */
-  def warmBucketed(spark: SparkSession, dir: String): Unit =
-    ensureBucketed(spark, dir)
 
   /** Revenue by priority over the co-located join (q131): lineitem ⋈
     * orders on the bucket key, then a priority rollup. The `merge`
@@ -288,20 +284,6 @@ object StorageOps {
       }
       (sorted, control)
     }
-
-  /** Bench warm-up hook for the q134-q136/q138/q140/q142 layout
-    * builds (plus q141's stored base rollup).
-    */
-  def warmLayouts(spark: SparkSession, dir: String): Unit = {
-    ensureEventLayouts(spark, dir)
-    ensureSortedLineitem(spark, dir)
-    ensureAuditDim(spark, dir)
-    ensureZorderLineitem(spark, dir)
-    ensureErasedLayout(spark, dir)
-    ensureBloomLineitem(spark, dir)
-    ensureManifestedEvents(spark, dir)
-    SketchOps.ensureBaseRollup(spark, dir)
-  }
 
   // ------------------------------------------------------------------
   // q138 dynamic partition pruning, q139 runtime bloom-filter join,

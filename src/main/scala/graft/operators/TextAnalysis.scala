@@ -404,7 +404,7 @@ object TextAnalysis {
     * (round 19): the graph a textrank deployment builds once at ingest
     * — ONE pin serves the driver fast path's bounded collect AND the
     * distributed loop (which has always pinned this exact frame as
-    * `textrank-<tag>-edges`); built by the warm path so its one-time
+    * `textrank-<tag>-edges`); declared in [[Artifacts]] so its one-time
     * explode + two aggregations land in shared_cache_sec, not on each
     * q76 run.
     */
@@ -422,11 +422,6 @@ object TextAnalysis {
     graft.core.Pin.shared(spark, s"textrank-${graft.core.Pin.tag(dir)}-edges")(
       edges.join(outw, "src")
         .select($"src", $"dst", ($"wt" / $"ow").as("p")))
-  }
-
-  /** Warm hook (Bench): the textrank edge artifact. */
-  def warmTextrankEdges(spark: SparkSession, dir: String): Unit = {
-    textrankEdgesPin(spark, dir).count(); ()
   }
 
   def textrankKeywords(spark: SparkSession, dir: String,

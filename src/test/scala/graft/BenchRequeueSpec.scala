@@ -83,4 +83,49 @@ class BenchRequeueSpec extends AnyFunSuite {
     assert(!Bench.bracketClean(clean, lead = 10))
   }
 
+  test("compact summary line: one JSON object, documented keys and types, no per-item maps") {
+    val longSf = "/data/scale/" + "nested-fixture-dir/" * 40 + "sf0.1"
+    val line = Bench.compactSummaryLine(total = 36.2, totalNorm = 35.9, nQueries = 160,
+      sfDir = longSf, master = "local[32]", iters = 3, scale = 0.991,
+      sharedCacheSec = 27.5, probeN = 162, pMin = 0.041, pMed = 0.064, pMax = 0.188,
+      hostNoise = 4.59, noisy = 2, requeued = 1, failedN = 0, contaminated = false)
+    assert(line.length < 2000, s"${line.length} chars")
+    val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(line)
+    import scala.jdk.CollectionConverters._
+    val keys = node.fieldNames().asScala.toSet
+    val numbers = Set("value", "probe_scale", "value_normalized", "shared_cache_sec", "host_noise")
+    val ints = Set("n_queries", "iters", "noisy_queries", "requeued", "failed_queries")
+    val strings = Set("metric", "unit", "sf", "master")
+    assert(keys == numbers ++ ints ++ strings ++ Set("probe", "contaminated"))
+    numbers.foreach(k => assert(node.get(k).isNumber, k))
+    ints.foreach(k => assert(node.get(k).isIntegralNumber, k))
+    strings.foreach(k => assert(node.get(k).isTextual, k))
+    assert(node.get("contaminated").isBoolean)
+    assert(node.get("sf").asText == longSf && node.get("n_queries").asInt == 160)
+    // the probe summary is the ONE nested object: four scalars, never a
+    // per-query or per-artifact map (those live in the full record)
+    val probe = node.get("probe")
+    assert(probe.fieldNames().asScala.toSet == Set("n", "min", "med", "max"))
+    assert(probe.elements().asScala.forall(_.isNumber))
+    assert(node.elements().asScala.count(_.isContainerNode) == 1)
+  }
+
+  test("persist refusal: filtered, non-canonical sf, non-canonical master, contaminated") {
+    val sf = "/root/testdata/sf0.1"
+    def refusal(only: Option[Seq[String]] = None, sfPath: String = sf,
+        master: String = "local[32]", cluster: Boolean = false,
+        contaminated: Boolean = false, exists: Boolean = true) =
+      Bench.persistRefusal(only, sfPath, master, cluster, contaminated, exists)
+    // the canonical full run persists, and so does a contaminated one
+    // that bootstraps a missing record
+    assert(refusal().isEmpty)
+    assert(refusal(contaminated = true, exists = false).isEmpty)
+    assert(refusal(only = Some(Seq("q01", "q70"))).exists(_.contains("filtered run (q01,q70)")))
+    assert(refusal(sfPath = "/data/sf1").exists(_.contains("non-canonical sf dir /data/sf1")))
+    // a local[8] run leaves the local[32] record untouched
+    assert(refusal(master = "local[8]").exists(_.contains("master local[8]")))
+    assert(refusal(contaminated = true).exists(_.contains("contaminated run")))
+    // the cluster record is keyed by its own file, not the local master
+    assert(refusal(master = "local-cluster[2,4,4096]", cluster = true).isEmpty)
+  }
 }
