@@ -212,8 +212,8 @@ final class ManifestStaleException(msg: String) extends java.io.IOException(msg)
   * | atomic create, content at close (HDFS: name reserved at create, bytes land later) | yes — an open-but-unwritten newest commit is WAITED OUT (`invalidGraceMs` below) instead of claimed over | yes |
   * | non-atomic create (check-then-put, torn bytes visible) | NO — two committers can both "win" one seq; bring a lock service or conditional PUT | yes — the sha-256 payload guard rejects torn/partial pointers, readers fall back to the newest valid commit, never regress past data loss, never mix states (`TornCreateCommitSpec`) |
   *
-  * (single-table writers here are additionally serialized in-JVM by
-  * the callers' `synchronized` ensure-blocks).
+  * (the catalog's layout writers are additionally serialized in-JVM:
+  * each table is one [[Memo]] key, whose build runs once at a time).
   *
   * Reading: leaf directories are grouped by generation prefix and
   * each group is read with its own `basePath`, so Hive-style

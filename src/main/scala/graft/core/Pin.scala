@@ -1,5 +1,7 @@
 package graft.core
 
+import java.util.concurrent.atomic.AtomicLong
+
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -25,9 +27,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * re-reads identical bytes, so pinned partition ids, pair lists and
   * model rows cannot drift or vanish mid-job, and repeated calls in
   * one session (Bench iterations, multi-consumer funnels) reuse the
-  * artifact instead of re-deriving it (the `fitMemo` discipline;
-  * the session-shared pins are declared in
-  * [[graft.operators.Artifacts]]).
+  * artifact instead of re-deriving it (the build-once [[Memo]]; the
+  * session-shared pins are declared in [[graft.operators.Artifacts]]).
   *
   * Path semantics go through the Hadoop [[FileSystem]] API resolved
   * from the session's Hadoop conf for writing, pruning and the
@@ -63,22 +64,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Pin {
 
-  // memo/sessionIds/lastBeat strongly retain sessions by design — a
-  // live session's pins must stay memoized for the JVM lifetime; tools
-  // that churn sessions call [[release]] to drop a dead session's
-  // entries (and optionally its artifacts) eagerly.
-  private val memo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  // memo/sessionIds strongly retain sessions by design — a live
+  // session's pins must stay memoized for the JVM lifetime; tools that
+  // churn sessions call [[release]] to drop a dead session's entries
+  // (and optionally its artifacts) eagerly. Each entry is the pin's
+  // re-read and its last heartbeat stamp, which rate-limits the mtime
+  // touch so hot loops (Bench iterations) don't do an FS op per call.
+  private val memo = new Memo[(SparkSession, String), (DataFrame, AtomicLong)]
 
   /** UUID directory component per live session, assigned on first pin. */
   private val sessionIds =
     new java.util.concurrent.ConcurrentHashMap[SparkSession, String]()
-
-  /** Last heartbeat stamp per (session, name) — rate-limits the mtime
-    * touch so hot loops (Bench iterations) don't do an FS op per call.
-    */
-  private val lastBeat =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), java.lang.Long]()
 
   /** Prune pin dirs untouched for this long. The heartbeat re-stamps
     * live pins on every reuse, so this bounds idle-between-reads time,
@@ -236,15 +232,13 @@ object Pin {
     * duration); on heartbeat-capable stores (local, HDFS) the
     * [[PruneAfterMs]] default is safe for jobs of any length.
     */
-  private def heartbeat(spark: SparkSession, name: String): Unit = {
-    val key = (spark, name)
+  private def heartbeat(spark: SparkSession, name: String, lastBeat: AtomicLong): Unit = {
     val now = System.currentTimeMillis()
-    val prev = lastBeat.get(key)
-    if (prev == null || now - prev.longValue() > BeatIntervalMs) {
+    if (now - lastBeat.get > BeatIntervalMs) {
       try {
         val (fs, _) = fsRoot(spark)
         fs.setTimes(dirOf(spark, name), now, -1)
-        lastBeat.put(key, java.lang.Long.valueOf(now))
+        lastBeat.set(now)
       } catch {
         case _: Exception => // best-effort: a missed beat only risks an
         // eager prune by ANOTHER jvm after 24h idle, never wrong data;
@@ -260,21 +254,21 @@ object Pin {
     * (fresh session, same dir) produces the same rows.
     */
   def shared(spark: SparkSession, name: String)(df: => DataFrame): DataFrame = {
-    val out = memo.computeIfAbsent((spark, name), _ => {
+    val (out, lastBeat) = memo((spark, name)) {
       val (fs, root) = fsRoot(spark)
       pruneStale(fs, root)
       val path = dirOf(spark, name).toString
       df.write.mode("overwrite").parquet(path)
-      spark.read.parquet(path)
-    })
-    heartbeat(spark, name)
+      (spark.read.parquet(path), new AtomicLong(0L))
+    }
+    heartbeat(spark, name, lastBeat)
     out
   }
 
   /** True iff the artifact for (session, name) has been built this JVM
     * — spec hook. */
   private[graft] def isBuilt(spark: SparkSession, name: String): Boolean =
-    memo.containsKey((spark, name))
+    memo.isBuilt((spark, name))
 
   private val reclaimed = new java.util.concurrent.atomic.AtomicLong(0L)
 
@@ -309,7 +303,7 @@ object Pin {
     } catch { case _: java.io.IOException => 0L }
 
   /** Drop every map entry held for `spark` and (optionally) delete its
-    * pin directories. The memo/sessionIds/lastBeat maps strongly retain
+    * pin directories. The memo/sessionIds maps strongly retain
     * sessions for the JVM lifetime by design (a live catalog session's
     * pins must stay memoized); tools that CHURN sessions — fault
     * harnesses spawning a fresh session per attempt — should call this
@@ -320,8 +314,7 @@ object Pin {
     */
   def release(spark: SparkSession, deleteArtifacts: Boolean = false): Unit = {
     val sid = sessionIds.remove(spark)
-    memo.keySet.removeIf(_._1 eq spark)
-    lastBeat.keySet.removeIf(_._1 eq spark)
+    memo.removeIf(_._1 eq spark)
     if (deleteArtifacts && sid != null) {
       try {
         val (fs, root) = fsRoot(spark)
@@ -335,8 +328,8 @@ object Pin {
 
   /** Retire ONE-SHOT per-run pins (round-18 ADVICE): delete the on-disk
     * artifact like [[retireArtifact]] AND evict the (session, name)
-    * memo/lastBeat entries — the loop-round fast-forward rationale for
-    * keeping them does not apply to a pin whose name is a fresh uuid
+    * memo entry — the loop-round fast-forward rationale for
+    * keeping it does not apply to a pin whose name is a fresh uuid
     * every run ([[ManifestMerge.run]]'s source pin), where kept entries
     * each retain a DataFrame plan and accumulate without bound in a
     * long-lived session doing many merges (a foreachBatch MERGE sink).
@@ -344,17 +337,12 @@ object Pin {
   private[graft] def releaseArtifact(spark: SparkSession, name: String): Long = {
     val bytes = retireArtifact(spark, name)
     memo.remove((spark, name))
-    lastBeat.remove((spark, name))
     bytes
   }
 
   /** Spec hook: live memo entries for one session (leak assertions). */
-  private[graft] def memoEntriesFor(spark: SparkSession): Int = {
-    val it = memo.keySet.iterator()
-    var c = 0
-    while (it.hasNext) if (it.next()._1 eq spark) c += 1
-    c
-  }
+  private[graft] def memoEntriesFor(spark: SparkSession): Int =
+    memo.countBuilt(_._1 eq spark)
 
   /** Spec hook: re-arm the once-per-JVM lazy prune. */
   private[graft] def rearmPruneForTest(): Unit = pruned.set(false)

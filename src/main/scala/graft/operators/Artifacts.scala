@@ -24,13 +24,12 @@ object Artifacts {
 
   /** One declared artifact. `reads` names artifacts declared EARLIER
     * in the same list whose output this build consumes (a cached plan
-    * it re-reads, a pin or layout it copies). `lock` is a monitor the
-    * builder holds for its whole build: [[walk]] never runs two builds
-    * on one lock at once, so no pool thread sits blocked on it and each
-    * build's seconds are its own, not its wait for another's.
+    * it re-reads, a pin or layout it copies). Every builder goes
+    * through a [[graft.core.Memo]], so builds of different artifacts
+    * never wait on each other.
     */
   final case class Artifact(name: String, reads: Seq[String],
-      build: (SparkSession, String) => Unit, lock: Option[AnyRef] = None)
+      build: (SparkSession, String) => Unit)
 
   /** What [[walk]] did with one artifact. */
   sealed trait Outcome
@@ -43,25 +42,21 @@ object Artifacts {
       build: (SparkSession, String) => Any): Artifact =
     Artifact(name, reads, (s, d) => { build(s, d); () })
 
-  /** A StorageOps build: every `ensure*` there is `synchronized` on
-    * the object. */
-  private def layout(name: String, reads: String*)(
-      build: (SparkSession, String) => Any): Artifact =
-    artifact(name, reads: _*)(build).copy(lock = Some(StorageOps))
-
   /** Every session-shared artifact, in dependency order. The order is
-    * also the walk's priority: the StorageOps layouts build one at a
-    * time and together are the longest chain, so they start first.
+    * also the walk's priority: the StorageOps layouts are the largest
+    * builds, and `erased_layout` waits on `event_layouts`, so that
+    * chain starts first.
     */
   val All: Seq[Artifact] = Seq(
-    layout("bucketed_tables")(StorageOps.ensureBucketed),
-    layout("event_layouts")(StorageOps.ensureEventLayouts),
-    layout("sorted_lineitem")(StorageOps.ensureSortedLineitem),
-    layout("audit_dim")(StorageOps.ensureAuditDim),
-    layout("zorder_lineitem")(StorageOps.ensureZorderLineitem),
-    layout("erased_layout", "event_layouts")(StorageOps.ensureErasedLayout),
-    layout("bloom_lineitem")(StorageOps.ensureBloomLineitem),
-    layout("manifested_events")(StorageOps.ensureManifestedEvents),
+    artifact("event_layouts")(StorageOps.ensureEventLayouts),
+    artifact("erased_layout", "event_layouts")(StorageOps.ensureErasedLayout),
+    artifact("merged_layout")(StorageOps.ensureMergedLayout),
+    artifact("bucketed_tables")(StorageOps.ensureBucketed),
+    artifact("sorted_lineitem")(StorageOps.ensureSortedLineitem),
+    artifact("audit_dim")(StorageOps.ensureAuditDim),
+    artifact("zorder_lineitem")(StorageOps.ensureZorderLineitem),
+    artifact("bloom_lineitem")(StorageOps.ensureBloomLineitem),
+    artifact("manifested_events")(StorageOps.ensureManifestedEvents),
     // q21/q78/q90/q128 signatures + verify; every shingle pin reads it
     artifact("shingle_index")(TextDedup.shingleIndex(_, _).cache().count()),
     artifact("minhash_bands", "shingle_index")(TextDedup.minhashBandsPin(_, _).count()),
@@ -74,6 +69,7 @@ object Artifacts {
     artifact("int8_store")(
       CorpusOps.int8Quantized(_, _, "c_id", "c", isQuery = false).count()),
     artifact("ivf_centroids")(Similarity.ivfCentroidsPin(_, _).count()),
+    artifact("ann_exact3")(CorpusOps.annExact3Pin(_, _).count()),
     artifact("span_grams")(SpanOps.grams(_, _).count()),
     artifact("eval_grams", "span_grams")(SpanOps.evalGramsPin(_, _).count()),
     artifact("textrank_edges")(TextAnalysis.textrankEdgesPin(_, _).count()),
@@ -89,10 +85,10 @@ object Artifacts {
 
   /** Build `artifacts` for (`spark`, `dir`) on a fixed pool of
     * [[PoolSize]] threads. An artifact starts only once everything it
-    * reads is built and no build on its lock is running, so no thread
-    * ever waits on another build; among the ready ones the earliest
-    * declared goes first. A failure is recorded with its cause and its
-    * dependents are skipped, naming what they read. Returns each
+    * reads is built, so no thread ever waits on another build; among
+    * the ready ones the earliest declared goes first. A failure is
+    * recorded with its cause and its dependents are skipped, naming
+    * what they read. Returns each
     * artifact's outcome in declaration order. Throws when the list is
     * malformed (a name declared twice, a read not declared before its
     * reader) or when the builds changed the session's conf, naming the
@@ -121,27 +117,24 @@ object Artifacts {
     }
     try {
       var pending = artifacts
-      val running = scala.collection.mutable.Map.empty[String, Option[AnyRef]]
-      while (pending.nonEmpty || running.nonEmpty) {
+      var running = 0
+      while (pending.nonEmpty || running > 0) {
         // in declaration order, so a skip propagates down the list
         pending = pending.filter { a =>
           val failedReads = a.reads.filter(r => outcomes.get(r).exists(!_.isInstanceOf[Built]))
           if (failedReads.nonEmpty) outcomes(a.name) = Skipped(failedReads)
           failedReads.isEmpty
         }
-        val locks = scala.collection.mutable.Set.from(running.values.flatten)
-        val ready = pending
-          .filter(_.reads.forall(outcomes.contains))
-          .filter(a => a.lock.forall(locks.add))
-          .take(PoolSize - running.size)
-        ready.foreach { a => done.submit(() => run(a)); running(a.name) = a.lock }
+        val ready = pending.filter(_.reads.forall(outcomes.contains)).take(PoolSize - running)
+        ready.foreach(a => done.submit(() => run(a)))
+        running += ready.size
         pending = pending.filterNot(ready.contains)
-        if (running.nonEmpty) {
+        if (running > 0) {
           val (name, outcome) =
             try done.take().get()
             catch { case e: ExecutionException => throw e.getCause } // fatal
           outcomes(name) = outcome
-          running -= name
+          running -= 1
         }
       }
     } finally pool.shutdown()

@@ -33,18 +33,29 @@ object CatalogOps {
   private lazy val warehouse: String =
     java.nio.file.Files.createTempDirectory("graft-cat-wh-").toString
 
-  private val built = new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+  private val tables = new graft.core.Memo[(SparkSession, String, String), String]
 
-  /** Build (once per session+dir) and return the catalog table name. */
-  private def ensureTable(spark: SparkSession, dir: String): String =
-    built.computeIfAbsent((spark, dir), _ => {
+  /** Build (once per session+dir) and return the catalog table
+    * `graftcat.bench.<name>_<tag>`; `fill` creates and loads it from
+    * `graft_cat_orders_src`, the view of `dir`'s orders.
+    */
+  private def catalogTable(spark: SparkSession, dir: String, name: String)(
+      fill: String => Unit): String =
+    tables((spark, name, dir)) {
       spark.conf.set("spark.sql.catalog.graftcat", "graft.catalog.GraftCatalog")
       spark.conf.set("spark.sql.catalog.graftcat.warehouse", warehouse)
-      val tbl = s"graftcat.bench.orders_${graft.core.Pin.tag(dir)}"
+      val tbl = s"graftcat.bench.${name}_${graft.core.Pin.tag(dir)}"
       spark.read.parquet(s"$dir/orders.parquet")
         .createOrReplaceTempView("graft_cat_orders_src")
       spark.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.bench")
       spark.sql(s"DROP TABLE IF EXISTS $tbl")
+      fill(tbl)
+      tbl
+    }
+
+  /** The q158-q160 table (the build recipe above). */
+  private def ensureTable(spark: SparkSession, dir: String): String =
+    catalogTable(spark, dir, "orders") { tbl =>
       spark.sql(
         s"""CREATE TABLE $tbl (o_orderkey BIGINT, o_totalprice DOUBLE,
            |  o_orderstatus STRING) USING graft PARTITIONED BY (o_orderstatus)
@@ -62,9 +73,8 @@ object CatalogOps {
            |WHEN MATCHED THEN UPDATE SET o_totalprice = t.o_totalprice + s.o_totalprice
            |WHEN NOT MATCHED THEN INSERT (o_orderkey, o_totalprice, o_orderstatus)
            |  VALUES (s.o_orderkey, s.o_totalprice, s.o_orderstatus)
-           |""".stripMargin)
-      tbl
-    })
+           |""".stripMargin): Unit
+    }
 
   /** q158: per-status rollup of the catalog table's FINAL state — the
     * whole SQL lifecycle (create/insert/merge) value-gated end to end.
@@ -133,17 +143,8 @@ object CatalogOps {
     * narrow and wide generations in one scan. The round-17 answer to
     * "my id outgrew int32" was a full Overwrite.
     */
-  private val builtWiden = new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-
   def sqlCatalogWiden(spark: SparkSession, dir: String): DataFrame = {
-    val tbl = builtWiden.computeIfAbsent((spark, dir), _ => {
-      spark.conf.set("spark.sql.catalog.graftcat", "graft.catalog.GraftCatalog")
-      spark.conf.set("spark.sql.catalog.graftcat.warehouse", warehouse)
-      val t = s"graftcat.bench.widen_${graft.core.Pin.tag(dir)}"
-      spark.read.parquet(s"$dir/orders.parquet")
-        .createOrReplaceTempView("graft_cat_orders_src")
-      spark.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.bench")
-      spark.sql(s"DROP TABLE IF EXISTS $t")
+    val tbl = catalogTable(spark, dir, "widen") { t =>
       spark.sql(s"CREATE TABLE $t (o_orderkey INT, o_totalprice DOUBLE) USING graft")
       spark.sql(
         s"""INSERT INTO $t SELECT cast(o_orderkey AS INT), o_totalprice
@@ -151,9 +152,8 @@ object CatalogOps {
       spark.sql(s"ALTER TABLE $t ALTER COLUMN o_orderkey TYPE BIGINT")
       spark.sql(
         s"""INSERT INTO $t SELECT o_orderkey + 5000000000, o_totalprice
-           |FROM graft_cat_orders_src WHERE o_orderkey % 7 = 0""".stripMargin)
-      t
-    })
+           |FROM graft_cat_orders_src WHERE o_orderkey % 7 = 0""".stripMargin): Unit
+    }
     spark.sql(
       s"""SELECT count(*) AS n_rows, sum(o_orderkey) AS sum_key,
          |  round(sum(o_totalprice), 2) AS sum_price

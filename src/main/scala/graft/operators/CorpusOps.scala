@@ -131,11 +131,10 @@ object CorpusOps {
     * the first action materializes them once. Production shape: the
     * assignments table persisted between pipeline stages.
     */
-  private val fitMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (DataFrame, DataFrame)]()
+  private val fits = new graft.core.Memo[(SparkSession, String), (DataFrame, DataFrame)]
 
   private[operators] def kmeansFit(spark: SparkSession, dir: String): (DataFrame, DataFrame) =
-    fitMemo.computeIfAbsent((spark, dir), _ => {
+    fits((spark, dir)) {
       import spark.implicits._
       val e = embeddingVectors(spark, dir)
       // one metadata-cheap count decides k; at the driver SFs the floor
@@ -179,7 +178,7 @@ object CorpusOps {
       // storage instead of depending on unreplicated executor blocks
       val cents = graft.core.Pin.shared(spark, s"kmeans-cents-${graft.core.Pin.tag(dir)}")(centroids)
       (cents, assign(cents).cache())
-    })
+    }
 
   /** The fitted centroid table of `dir`'s embedding corpus — the
     * 4-row (cid, cvec) model the streaming SemDeDup twin pins: write
@@ -1363,6 +1362,20 @@ object CorpusOps {
 
   // --------------------------------------------- q105 ANN recall audit
 
+  /** The exact cosine top-3 per query (q105's ground truth). A durable
+    * pin, not a localCheckpoint: q105 consumes it four times, and the
+    * round-10 kill-soak (an executor SIGKILLed every 20 s through the
+    * whole cluster-mode Verify) caught the old localCheckpoint dying
+    * unrecoverably mid-query (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND) — the
+    * exact failure mode Pin.shared exists to remove. The exact top-3 is
+    * also a sensible ingest-time artifact in its own right (the
+    * ground-truth table an ANN deployment audits against).
+    */
+  private[operators] def annExact3Pin(spark: SparkSession, dir: String): DataFrame =
+    graft.core.Pin.shared(spark, s"ann-exact3-${graft.core.Pin.tag(dir)}")(
+      Similarity.cosineTopK(spark, dir)
+        .filter(col("rank") <= 3).select(col("q_id"), col("c_id")))
+
   /** ANN recall audit (q105): recall@3 of each approximate index —
     * hyperplane LSH (q30), IVF (q62), PQ/ADC (q101) — against the exact
     * cosine top-3 (q29), per query. The quality dial every ANN
@@ -1375,16 +1388,7 @@ object CorpusOps {
     */
   def annRecall(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    // durable pin, not localCheckpoint: consumed four times below, and
-    // the round-10 kill-soak (an executor SIGKILLed every 20 s through
-    // the whole cluster-mode Verify) caught the old localCheckpoint
-    // dying unrecoverably mid-query (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND)
-    // — the exact failure mode Pin.shared exists to remove. The exact
-    // top-3 is also a sensible ingest-time artifact in its own right
-    // (the ground-truth table an ANN deployment audits against).
-    val exact3 = graft.core.Pin.shared(spark, s"ann-exact3-${graft.core.Pin.tag(dir)}")(
-      Similarity.cosineTopK(spark, dir)
-        .filter($"rank" <= 3).select($"q_id", $"c_id"))
+    val exact3 = annExact3Pin(spark, dir)
     val qs = exact3.select($"q_id").distinct()
     val methods = Seq(
       "lsh" -> Similarity.annLsh(spark, dir),

@@ -271,44 +271,38 @@ object SketchOps {
     */
   private[operators] val RollupDeltaStart = "2024-01-30 00:00:00"
 
-  private val rollupBuilt = scala.collection.mutable.Set.empty[String]
-
   /** Path of the STORED base rollup for `dir` — per event_type: row
     * count, raw value sum, and the HLL user sketch over the closed
     * period (ts < [[RollupDeltaStart]]). This parquet is the artifact
     * a nightly job persists; the apply step merges against it without
     * ever rescanning the closed days.
     */
-  def ensureBaseRollup(spark: SparkSession, dir: String): String =
-    synchronized {
-      // _d6 suffix: artifact format versioning — the round-9 decimal
-      // sum changed the stored schema, and a stale double-summed base
-      // from an earlier build must not satisfy the _SUCCESS check.
-      // Root + marker probe ride StorageOps' Hadoop-FS helpers
-      // (round 11): a java.io.File check against the driver's local
-      // disk could never see a cluster-side layout.
-      val path = s"${StorageOps.layoutBase(spark, dir)}/rollup_base_d6"
-      if (!rollupBuilt.contains(path) ||
-        !StorageOps.markerExists(spark, path, "_SUCCESS")) {
-        Tables.load(spark, dir, "events")
-          .filter(col("ts") < lit(RollupDeltaStart).cast("timestamp"))
-          .groupBy(col("event_type"))
-          // sum as DECIMAL(18,6): the artifact's sum and the delta's
-          // sum are added in a DIFFERENT association order than any
-          // single-pass sum over the same rows — exact decimal
-          // accumulation makes split+merge ≡ one pass by construction
-          // (double sums could land on opposite sides of a half-cent
-          // rounding boundary; ExtendedRelational.scala's decimal
-          // precedent)
-          .agg(count(lit(1)).as("n_events"),
-            sum(col("value").cast("decimal(18,6)")).as("sum_value"),
-            hll_sketch_agg(col("user_id"), lit(HllLgK)).as("sk"))
-          .coalesce(1)
-          .write.mode("overwrite").parquet(path)
-        rollupBuilt += path
-      }
-      path
+  def ensureBaseRollup(spark: SparkSession, dir: String): String = {
+    // _d6 suffix: artifact format versioning — the round-9 decimal
+    // sum changed the stored schema, and a stale double-summed base
+    // from an earlier build must not satisfy the _SUCCESS check.
+    // Root + marker probe ride StorageOps' Hadoop-FS helpers
+    // (round 11): a java.io.File check against the driver's local
+    // disk could never see a cluster-side layout.
+    val path = s"${StorageOps.layoutBase(spark, dir)}/rollup_base_d6"
+    StorageOps.layout(spark, path) {
+      Tables.load(spark, dir, "events")
+        .filter(col("ts") < lit(RollupDeltaStart).cast("timestamp"))
+        .groupBy(col("event_type"))
+        // sum as DECIMAL(18,6): the artifact's sum and the delta's
+        // sum are added in a DIFFERENT association order than any
+        // single-pass sum over the same rows — exact decimal
+        // accumulation makes split+merge ≡ one pass by construction
+        // (double sums could land on opposite sides of a half-cent
+        // rounding boundary; ExtendedRelational.scala's decimal
+        // precedent)
+        .agg(count(lit(1)).as("n_events"),
+          sum(col("value").cast("decimal(18,6)")).as("sum_value"),
+          hll_sketch_agg(col("user_id"), lit(HllLgK)).as("sk"))
+        .coalesce(1)
+        .write.mode("overwrite").parquet(path)
     }
+  }
 
   /** Incremental rollup apply (q141): yesterday's stored aggregate +
     * today's delta → today's aggregate, with the CLOSED history never

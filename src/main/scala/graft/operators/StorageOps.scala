@@ -24,8 +24,8 @@ import org.apache.spark.sql.functions._
   * parquet.
   *
   * The bucketed copies are a session-shared build (declared in
-  * [[Artifacts]]): first use writes them under
-  * `target/graft-bucketed/<tag>/`, Bench's warm-up pre-builds so
+  * [[Artifacts]]): first use writes them under the layout root
+  * ([[layoutBase]]`/bucketed_*`), Bench's warm-up pre-builds so
   * per-query numbers measure the steady state a real deployment
   * lives in.
   *
@@ -43,9 +43,8 @@ object StorageOps {
     */
   private val NumBuckets = 16
 
-  private val built = scala.collection.mutable.Set.empty[String]
-
-  private def tag(dir: String): String = graft.core.Pin.tag(dir)
+  /** Every layout, built once per JVM and keyed by its path. */
+  private val layouts = new graft.core.Memo[String, Unit]
 
   /** Session conf key overriding the layout root — the artifact tree
     * holding the compacted/sorted/z-order/bloom/erased copies; like
@@ -58,61 +57,63 @@ object StorageOps {
 
   /** The layout base for `dir` under the session's configured root. */
   private[graft] def layoutBase(spark: SparkSession, dir: String): String =
-    s"${spark.conf.get(RootConfKey, DefaultRoot)}/${tag(dir)}"
+    s"${spark.conf.get(RootConfKey, DefaultRoot)}/${graft.core.Pin.tag(dir)}"
 
   private def hfsPath(spark: SparkSession, path: String) = {
     val p = new org.apache.hadoop.fs.Path(path)
     (p.getFileSystem(spark.sessionState.newHadoopConf()), p)
   }
 
-  /** Marker probe via the Hadoop FS (round-11): the old
-    * `java.io.File` check ran against the DRIVER's local disk, so on
-    * a cluster whose default FS is HDFS/S3 it could never see the
-    * layout the write path had created there — every call would
-    * rebuild the layout, and q142's `_ERASED` marker would
-    * split-brain (marker local, data remote). Same hazard class as
-    * the round-9 Pin pruning advice, same fix.
-    */
-  private[operators] def markerExists(spark: SparkSession, dir: String, marker: String): Boolean = {
-    val (fs, p) = hfsPath(spark, s"$dir/$marker")
-    fs.exists(p)
-  }
-
-  private[operators] def touchMarker(spark: SparkSession, dir: String, marker: String): Unit = {
+  private def touchMarker(spark: SparkSession, dir: String, marker: String): Unit = {
     val (fs, p) = hfsPath(spark, s"$dir/$marker")
     fs.create(p, true).close()
   }
 
-  /** Table names of the bucketed (lineitem, orders) copies for `dir`,
-    * building them on first use in this JVM. Synchronized: concurrent
-    * first-touch from parallel specs must build once.
+  /** Build the layout at `path` once per JVM; a call that finds its
+    * `marker` missing builds it again. Returns `path`. The marker is
+    * probed via the Hadoop FS (round-11): the old `java.io.File` check
+    * ran against the DRIVER's local disk, so on a cluster whose default
+    * FS is HDFS/S3 it could never see the layout the write path had
+    * created there — every call would rebuild the layout, and q142's
+    * `_ERASED` marker would split-brain (marker local, data remote).
     */
-  def ensureBucketed(spark: SparkSession, dir: String): (String, String) =
-    synchronized {
-      val t = tag(dir)
-      val li = s"graft_bkt_lineitem_$t"
-      val ord = s"graft_bkt_orders_$t"
-      if (!built.contains(t) || !spark.catalog.tableExists(li)) {
-        val base = s"target/graft-bucketed/$t"
-        // repartition by the bucket key first: each task then owns
-        // whole buckets, so every bucket lands in ONE file — the
-        // layout that keeps bucketed reads one-split-per-bucket.
-        Tables.load(spark, dir, "lineitem")
-          .repartition(NumBuckets, col("l_orderkey"))
-          .write.mode("overwrite")
-          .option("path", s"$base/lineitem")
-          .bucketBy(NumBuckets, "l_orderkey").sortBy("l_orderkey")
-          .format("parquet").saveAsTable(li)
-        Tables.load(spark, dir, "orders")
-          .repartition(NumBuckets, col("o_orderkey"))
-          .write.mode("overwrite")
-          .option("path", s"$base/orders")
-          .bucketBy(NumBuckets, "o_orderkey").sortBy("o_orderkey")
-          .format("parquet").saveAsTable(ord)
-        built += t
-      }
-      (li, ord)
+  private[operators] def layout(spark: SparkSession, path: String,
+      marker: String = "_SUCCESS")(build: => Unit): String = {
+    val (fs, p) = hfsPath(spark, s"$path/$marker")
+    layouts(path, fs.exists(p))(build)
+    path
+  }
+
+  /** Table names of the bucketed (lineitem, orders) copies for `dir`,
+    * building them on first use in this JVM. The copies live under the
+    * layout root, qualified through the session's Hadoop FS: a relative
+    * `path` option would resolve against the warehouse instead.
+    */
+  def ensureBucketed(spark: SparkSession, dir: String): (String, String) = {
+    val t = graft.core.Pin.tag(dir)
+    val li = s"graft_bkt_lineitem_$t"
+    val ord = s"graft_bkt_orders_$t"
+    val (fs, p) = hfsPath(spark, layoutBase(spark, dir))
+    val base = fs.makeQualified(p).toString
+    layouts(s"$base/bucketed_lineitem", spark.catalog.tableExists(li)) {
+      // repartition by the bucket key first: each task then owns
+      // whole buckets, so every bucket lands in ONE file — the
+      // layout that keeps bucketed reads one-split-per-bucket.
+      Tables.load(spark, dir, "lineitem")
+        .repartition(NumBuckets, col("l_orderkey"))
+        .write.mode("overwrite")
+        .option("path", s"$base/bucketed_lineitem")
+        .bucketBy(NumBuckets, "l_orderkey").sortBy("l_orderkey")
+        .format("parquet").saveAsTable(li)
+      Tables.load(spark, dir, "orders")
+        .repartition(NumBuckets, col("o_orderkey"))
+        .write.mode("overwrite")
+        .option("path", s"$base/bucketed_orders")
+        .bucketBy(NumBuckets, "o_orderkey").sortBy("o_orderkey")
+        .format("parquet").saveAsTable(ord)
     }
+    (li, ord)
+  }
 
   /** Revenue by priority over the co-located join (q131): lineitem ⋈
     * orders on the bucket key, then a priority rollup. The `merge`
@@ -183,24 +184,16 @@ object StorageOps {
     */
   private val IngestFilesPerDay = 8
 
-  private val layoutsBuilt = scala.collection.mutable.Set.empty[String]
-
   /** Run `body` with parquet timestamps written as INT64 micros
     * instead of the legacy INT96 default: INT96 chunks carry NO
     * min/max statistics, so a timestamp-sorted layout would lose all
-    * row-group skipping (q136's whole point). Scoped to the layout
-    * writes — the driver's oracle reads Verify outputs as NAIVE
-    * timestamps, which only the INT96 default round-trips, so the
-    * session default must stay untouched.
-    */
-  /** Run `body` with parquet timestamps as TIMESTAMP_MICROS — on a
-    * PRIVATE cloned session (round 16): the old set/restore on the
-    * shared session's conf raced every concurrent writer in the JVM
-    * (the merge soak caught an unrelated query dump written mid-toggle
-    * coming out UTC-annotated — silent schema drift in someone else's
-    * output). The clone shares the SparkContext but owns its SQLConf;
-    * `body` receives the clone and must route its reads AND writes
-    * through it.
+    * row-group skipping (q136's whole point). The driver's oracle
+    * reads Verify outputs as NAIVE timestamps, which only the INT96
+    * default round-trips, so the switch lives on a PRIVATE cloned
+    * session (round 16: a set/restore on the shared session raced
+    * every concurrent writer in the JVM). The clone shares the
+    * SparkContext but owns its SQLConf; `body` receives the clone and
+    * must route its reads AND writes through it.
     */
   private def withMicrosTimestamps[T](spark: SparkSession)(body: SparkSession => T): T = {
     val ws = org.apache.spark.sql.graft.Bridge.cloneSession(spark)
@@ -229,30 +222,26 @@ object StorageOps {
     * (filter to the partitions behind a watermark) instead of
     * table-at-once; the per-partition plan is unchanged.
     */
-  def ensureEventLayouts(spark: SparkSession, dir: String): (String, String) =
-    synchronized {
-      val base = layoutBase(spark, dir)
-      val frag = s"$base/events_ingest"
-      val comp = s"$base/events_by_day"
-      val key = s"events:$base"
-      if (!layoutsBuilt.contains(key) ||
-        !markerExists(spark, comp, "_SUCCESS")) {
-        val ev = Tables.load(spark, dir, "events")
-          .withColumn("day", to_date(col("ts")))
-        withMicrosTimestamps(spark) { ws =>
-          // round-robin fan-out: every ingest task holds rows of EVERY
-          // day, so each day= dir collects one file per task — the
-          // small-files shape a streaming sink produces.
-          onSession(ws, ev).repartition(IngestFilesPerDay)
-            .write.mode("overwrite").partitionBy("day").parquet(frag)
-          ws.read.parquet(frag)
-            .repartition(col("day"))
-            .write.mode("overwrite").partitionBy("day").parquet(comp)
-        }
-        layoutsBuilt += key
+  def ensureEventLayouts(spark: SparkSession, dir: String): (String, String) = {
+    val base = layoutBase(spark, dir)
+    val frag = s"$base/events_ingest"
+    val comp = s"$base/events_by_day"
+    layout(spark, comp) {
+      val ev = Tables.load(spark, dir, "events")
+        .withColumn("day", to_date(col("ts")))
+      withMicrosTimestamps(spark) { ws =>
+        // round-robin fan-out: every ingest task holds rows of EVERY
+        // day, so each day= dir collects one file per task — the
+        // small-files shape a streaming sink produces.
+        onSession(ws, ev).repartition(IngestFilesPerDay)
+          .write.mode("overwrite").partitionBy("day").parquet(frag)
+        ws.read.parquet(frag)
+          .repartition(col("day"))
+          .write.mode("overwrite").partitionBy("day").parquet(comp)
       }
-      (frag, comp)
     }
+    (frag, comp)
+  }
 
   /** Path of the range-sorted lineitem copy (and its round-robin
     * control twin) for `dir`. `repartitionByRange` on the sort column
@@ -264,26 +253,22 @@ object StorageOps {
     * spans the full date range, nothing can skip — so the layout, not
     * the writer, is provably what prunes.
     */
-  def ensureSortedLineitem(spark: SparkSession, dir: String): (String, String) =
-    synchronized {
-      val base = layoutBase(spark, dir)
-      val sorted = s"$base/lineitem_by_shipdate"
-      val control = s"$base/lineitem_roundrobin"
-      val key = s"lineitem:$base"
-      if (!layoutsBuilt.contains(key) ||
-        !markerExists(spark, sorted, "_SUCCESS")) {
-        val li = Tables.load(spark, dir, "lineitem")
-        withMicrosTimestamps(spark) { ws =>
-          onSession(ws, li).repartitionByRange(32, col("l_shipdate"))
-            .sortWithinPartitions("l_shipdate")
-            .write.mode("overwrite").parquet(sorted)
-          onSession(ws, li).repartition(32)
-            .write.mode("overwrite").parquet(control)
-        }
-        layoutsBuilt += key
+  def ensureSortedLineitem(spark: SparkSession, dir: String): (String, String) = {
+    val base = layoutBase(spark, dir)
+    val sorted = s"$base/lineitem_by_shipdate"
+    val control = s"$base/lineitem_roundrobin"
+    layout(spark, sorted) {
+      val li = Tables.load(spark, dir, "lineitem")
+      withMicrosTimestamps(spark) { ws =>
+        onSession(ws, li).repartitionByRange(32, col("l_shipdate"))
+          .sortWithinPartitions("l_shipdate")
+          .write.mode("overwrite").parquet(sorted)
+        onSession(ws, li).repartition(32)
+          .write.mode("overwrite").parquet(control)
       }
-      (sorted, control)
     }
+    (sorted, control)
+  }
 
   // ------------------------------------------------------------------
   // q138 dynamic partition pruning, q139 runtime bloom-filter join,
@@ -316,24 +301,19 @@ object StorageOps {
     * *selective filter over a scan* on the dim side — exactly the
     * shape a real audit-calendar table has.
     */
-  def ensureAuditDim(spark: SparkSession, dir: String): String =
-    synchronized {
-      import spark.implicits._
-      val path = s"${layoutBase(spark, dir)}/dim_days"
-      val key = s"dim:$path"
-      if (!layoutsBuilt.contains(key) ||
-        !markerExists(spark, path, "_SUCCESS")) {
-        val audit = AuditDays.toSet
-        (1 to 30).map(d => f"2024-01-$d%02d")
-          .map(d => (d, if (audit(d)) "audit" else "normal"))
-          .toDF("day_str", "kind")
-          .select(to_date(col("day_str")).as("day"), col("kind"))
-          .coalesce(1)
-          .write.mode("overwrite").parquet(path)
-        layoutsBuilt += key
-      }
-      path
+  def ensureAuditDim(spark: SparkSession, dir: String): String = {
+    import spark.implicits._
+    val path = s"${layoutBase(spark, dir)}/dim_days"
+    layout(spark, path) {
+      val audit = AuditDays.toSet
+      (1 to 30).map(d => f"2024-01-$d%02d")
+        .map(d => (d, if (audit(d)) "audit" else "normal"))
+        .toDF("day_str", "kind")
+        .select(to_date(col("day_str")).as("day"), col("kind"))
+        .coalesce(1)
+        .write.mode("overwrite").parquet(path)
     }
+  }
 
   /** q138: the 7-audit-day event rollup, where the day set arrives as
     * a FILTER ON ANOTHER TABLE rather than a literal predicate. The
@@ -450,38 +430,33 @@ object StorageOps {
     * domains; the quantization only needs bounds that CONTAIN the
     * data — staleness just wastes resolution).
     */
-  def ensureZorderLineitem(spark: SparkSession, dir: String): String =
-    synchronized {
-      import spark.implicits._
-      val path = s"${layoutBase(spark, dir)}/lineitem_zorder"
-      val key = s"zorder:$path"
-      if (!layoutsBuilt.contains(key) ||
-        !markerExists(spark, path, "_SUCCESS")) {
-        val li = Tables.load(spark, dir, "lineitem")
-        val epoch = to_date(lit("1990-01-01"))
-        val bounds = li.agg(
-          min(datediff(to_date($"l_shipdate"), epoch)),
-          max(datediff(to_date($"l_shipdate"), epoch)),
-          min($"l_suppkey"), max($"l_suppkey")).head()
-        val (dLo, dHi) = (bounds.getInt(0).toLong, bounds.getInt(1).toLong)
-        val (kLo, kHi) = (bounds.getLong(2), bounds.getLong(3))
-        def quant(c: org.apache.spark.sql.Column, lo: Long, hi: Long) =
-          ((c - lit(lo)) * lit(65535L) / lit(math.max(hi - lo, 1L)))
-            .cast("long")
-        val z = interleaveBits(
-          quant(datediff(to_date($"l_shipdate"), epoch).cast("long"), dLo, dHi),
-          quant($"l_suppkey", kLo, kHi))
-        withMicrosTimestamps(spark) { ws =>
-          onSession(ws, li).withColumn("__z", z)
-            .repartitionByRange(32, $"__z")
-            .sortWithinPartitions("__z")
-            .drop("__z")
-            .write.mode("overwrite").parquet(path)
-        }
-        layoutsBuilt += key
+  def ensureZorderLineitem(spark: SparkSession, dir: String): String = {
+    import spark.implicits._
+    val path = s"${layoutBase(spark, dir)}/lineitem_zorder"
+    layout(spark, path) {
+      val li = Tables.load(spark, dir, "lineitem")
+      val epoch = to_date(lit("1990-01-01"))
+      val bounds = li.agg(
+        min(datediff(to_date($"l_shipdate"), epoch)),
+        max(datediff(to_date($"l_shipdate"), epoch)),
+        min($"l_suppkey"), max($"l_suppkey")).head()
+      val (dLo, dHi) = (bounds.getInt(0).toLong, bounds.getInt(1).toLong)
+      val (kLo, kHi) = (bounds.getLong(2), bounds.getLong(3))
+      def quant(c: org.apache.spark.sql.Column, lo: Long, hi: Long) =
+        ((c - lit(lo)) * lit(65535L) / lit(math.max(hi - lo, 1L)))
+          .cast("long")
+      val z = interleaveBits(
+        quant(datediff(to_date($"l_shipdate"), epoch).cast("long"), dLo, dHi),
+        quant($"l_suppkey", kLo, kHi))
+      withMicrosTimestamps(spark) { ws =>
+        onSession(ws, li).withColumn("__z", z)
+          .repartitionByRange(32, $"__z")
+          .sortWithinPartitions("__z")
+          .drop("__z")
+          .write.mode("overwrite").parquet(path)
       }
-      path
     }
+  }
 
   /** q140: a two-dimensional window — one quarter × two suppliers —
     * answered from the Z-ordered layout. Both predicates reach the
@@ -798,26 +773,22 @@ object StorageOps {
     * compacted day-partitioned events with [[ErasedUsers]] erased via
     * [[eraseUsers]] at build time. Session-shared like every layout.
     */
-  def ensureErasedLayout(spark: SparkSession, dir: String): String =
-    synchronized {
-      val path = s"${layoutBase(spark, dir)}/events_erased"
-      val key = s"erased:$path"
-      // the copy's own _SUCCESS is not enough: a crash between copy
-      // and erase would leave a marker-bearing layout with the victims
-      // still present — the erase writes its OWN marker when done
-      if (!layoutsBuilt.contains(key) || !markerExists(spark, path, "_ERASED")) {
-        val (_, comp) = ensureEventLayouts(spark, dir)
-        withMicrosTimestamps(spark) { ws =>
-          ws.read.parquet(comp)
-            .repartition(col("day"))
-            .write.mode("overwrite").partitionBy("day").parquet(path)
-        }
-        eraseUsers(spark, path, ErasedUsers)
-        touchMarker(spark, path, "_ERASED")
-        layoutsBuilt += key
+  def ensureErasedLayout(spark: SparkSession, dir: String): String = {
+    val path = s"${layoutBase(spark, dir)}/events_erased"
+    // the copy's own _SUCCESS is not enough: a crash between copy
+    // and erase would leave a marker-bearing layout with the victims
+    // still present — the erase writes its OWN marker when done
+    layout(spark, path, "_ERASED") {
+      val (_, comp) = ensureEventLayouts(spark, dir)
+      withMicrosTimestamps(spark) { ws =>
+        ws.read.parquet(comp)
+          .repartition(col("day"))
+          .write.mode("overwrite").partitionBy("day").parquet(path)
       }
-      path
+      eraseUsers(spark, path, ErasedUsers)
+      touchMarker(spark, path, "_ERASED")
     }
+  }
 
   /** The q143 point-lookup keys — present at every driver SF (and in
     * every ScaleFixture replica set, whose key shifts preserve the
@@ -836,28 +807,24 @@ object StorageOps {
     * twin differs ONLY in the writer option, so the spec's footer
     * census proves the option (not the writer) planted the index.
     */
-  def ensureBloomLineitem(spark: SparkSession, dir: String): (String, String) =
-    synchronized {
-      val base = layoutBase(spark, dir)
-      val bloom = s"$base/lineitem_bloom"
-      val control = s"$base/lineitem_nobloom"
-      val key = s"bloom:$base"
-      if (!layoutsBuilt.contains(key) ||
-        !markerExists(spark, bloom, "_SUCCESS")) {
-        val li = Tables.load(spark, dir, "lineitem")
-        withMicrosTimestamps(spark) { ws =>
-          onSession(ws, li).repartition(32)
-            .write.mode("overwrite")
-            .option("parquet.bloom.filter.enabled#l_orderkey", "true")
-            .option("parquet.bloom.filter.expected.ndv#l_orderkey", "100000")
-            .parquet(bloom)
-          li.repartition(32)
-            .write.mode("overwrite").parquet(control)
-        }
-        layoutsBuilt += key
+  def ensureBloomLineitem(spark: SparkSession, dir: String): (String, String) = {
+    val base = layoutBase(spark, dir)
+    val bloom = s"$base/lineitem_bloom"
+    val control = s"$base/lineitem_nobloom"
+    layout(spark, bloom) {
+      val li = Tables.load(spark, dir, "lineitem")
+      withMicrosTimestamps(spark) { ws =>
+        onSession(ws, li).repartition(32)
+          .write.mode("overwrite")
+          .option("parquet.bloom.filter.enabled#l_orderkey", "true")
+          .option("parquet.bloom.filter.expected.ndv#l_orderkey", "100000")
+          .parquet(bloom)
+        li.repartition(32)
+          .write.mode("overwrite").parquet(control)
       }
-      (bloom, control)
     }
+    (bloom, control)
+  }
 
   /** q143: a point lookup over the bloom-indexed UNSORTED layout —
     * the "fetch these order ids out of 100 TB" shape. The IN
@@ -1103,24 +1070,20 @@ object StorageOps {
     * every layout; INT64-micros timestamps so footers carry usable
     * stats.
     */
-  def ensureManifestedEvents(spark: SparkSession, dir: String): String =
-    synchronized {
-      val path = s"${layoutBase(spark, dir)}/events_manifested"
-      val key = s"manifested:$path"
-      val (fs, p) = hfsPath(spark, path)
-      if (!layoutsBuilt.contains(key) ||
-        graft.core.ManifestTable.resolve(fs, p).isEmpty) {
-        val ev = Tables.load(spark, dir, "events")
-          .withColumn("day", to_date(col("ts")))
-        withMicrosTimestamps(spark) { ws =>
-          graft.core.ManifestWrite.write(
-            onSession(ws, ev).repartition(col("day")), path,
-            "day", org.apache.spark.sql.SaveMode.Overwrite)
-        }
-        layoutsBuilt += key
+  def ensureManifestedEvents(spark: SparkSession, dir: String): String = {
+    val path = s"${layoutBase(spark, dir)}/events_manifested"
+    val (fs, p) = hfsPath(spark, path)
+    layouts(path, graft.core.ManifestTable.resolve(fs, p).isDefined) {
+      val ev = Tables.load(spark, dir, "events")
+        .withColumn("day", to_date(col("ts")))
+      withMicrosTimestamps(spark) { ws =>
+        graft.core.ManifestWrite.write(
+          onSession(ws, ev).repartition(col("day")), path,
+          "day", org.apache.spark.sql.SaveMode.Overwrite)
       }
-      path
     }
+    path
+  }
 
   /** q149: a 3-day event rollup whose predicate is on `ts` — NOT the
     * partition column — answered from the manifested layout. Static
@@ -1216,47 +1179,43 @@ object StorageOps {
     * marker is missing — a crash between copy and merges (or a layout
     * built before change capture existed) must not pass as done.
     */
-  def ensureMergedLayout(spark: SparkSession, dir: String): String =
-    synchronized {
-      val path = s"${layoutBase(spark, dir)}/events_merged"
-      val key = s"merged:$path"
-      if (!layoutsBuilt.contains(key) || !markerExists(spark, path, "_MERGED_CDF")) {
-        val ev = Tables.load(spark, dir, "events")
-          .withColumn("day", to_date(col("ts")))
-        withMicrosTimestamps(spark) { ws =>
-          graft.core.ManifestWrite.write(
-            onSession(ws, ev).repartitionByRange(8, col("event_id")), path,
-            "day", org.apache.spark.sql.SaveMode.Overwrite)
-        }
-        // q155's replica: SEEDED at the pre-merge snapshot, so its
-        // later catch-up must replay both merges purely from the
-        // captured feed — the whole CDC loop under the value oracle.
-        // A rebuild starts the replica over (its ledger would point
-        // into the torn-down history otherwise).
-        val (rfs, rpath) = hfsPath(spark, s"$path-replica")
-        rfs.delete(rpath, true)
-        graft.core.ManifestChanges.replicate(
-          spark, path, s"$path-replica", Seq("event_id"), "day"): Unit
-        // merge 1: keyed UPDATE (matched) + INSERT (shifted ids miss)
-        val upd = ev.filter(col("event_id").between(MergeUpdateLo, MergeUpdateHi))
-          .withColumn("value", col("value") + lit(1000.0))
-        val ins = upd.withColumn("event_id", col("event_id") + lit(MergeInsertShift))
-        graft.core.ManifestMerge(path, Seq("event_id"))
-          .whenMatchedUpdate(Map("value" -> ((s, _) => s("value"))))
-          .whenNotMatchedInsert()
-          .withChangeFeed()
-          .run(upd.unionByName(ins))
-        // merge 2: keyed DELETE
-        graft.core.ManifestMerge(path, Seq("event_id"))
-          .whenMatchedDelete()
-          .withChangeFeed()
-          .run(ev.filter(col("event_id").between(MergeDeleteLo, MergeDeleteHi))
-            .select("event_id"))
-        touchMarker(spark, path, "_MERGED_CDF")
-        layoutsBuilt += key
+  def ensureMergedLayout(spark: SparkSession, dir: String): String = {
+    val path = s"${layoutBase(spark, dir)}/events_merged"
+    layout(spark, path, "_MERGED_CDF") {
+      val ev = Tables.load(spark, dir, "events")
+        .withColumn("day", to_date(col("ts")))
+      withMicrosTimestamps(spark) { ws =>
+        graft.core.ManifestWrite.write(
+          onSession(ws, ev).repartitionByRange(8, col("event_id")), path,
+          "day", org.apache.spark.sql.SaveMode.Overwrite)
       }
-      path
+      // q155's replica: SEEDED at the pre-merge snapshot, so its
+      // later catch-up must replay both merges purely from the
+      // captured feed — the whole CDC loop under the value oracle.
+      // A rebuild starts the replica over (its ledger would point
+      // into the torn-down history otherwise).
+      val (rfs, rpath) = hfsPath(spark, s"$path-replica")
+      rfs.delete(rpath, true)
+      graft.core.ManifestChanges.replicate(
+        spark, path, s"$path-replica", Seq("event_id"), "day"): Unit
+      // merge 1: keyed UPDATE (matched) + INSERT (shifted ids miss)
+      val upd = ev.filter(col("event_id").between(MergeUpdateLo, MergeUpdateHi))
+        .withColumn("value", col("value") + lit(1000.0))
+      val ins = upd.withColumn("event_id", col("event_id") + lit(MergeInsertShift))
+      graft.core.ManifestMerge(path, Seq("event_id"))
+        .whenMatchedUpdate(Map("value" -> ((s, _) => s("value"))))
+        .whenNotMatchedInsert()
+        .withChangeFeed()
+        .run(upd.unionByName(ins))
+      // merge 2: keyed DELETE
+      graft.core.ManifestMerge(path, Seq("event_id"))
+        .whenMatchedDelete()
+        .withChangeFeed()
+        .run(ev.filter(col("event_id").between(MergeDeleteLo, MergeDeleteHi))
+          .select("event_id"))
+      touchMarker(spark, path, "_MERGED_CDF")
     }
+  }
 
   /** q151: the per-day audit of the MERGED layout — the completion
     * evidence a keyed backfill job emits. The value oracle recomputes

@@ -41,7 +41,7 @@ class LayoutMemFsSpec extends SparkSpec {
     assert(keys.exists(k => k.endsWith("events_erased/_ERASED")),
       "erase-completion marker missing on memfs")
     // marker probe goes through the SAME fs: a second call in this
-    // session must fast-forward (markerExists true), not rebuild —
+    // session must fast-forward (marker found), not rebuild —
     // observable as identical file set afterwards
     val before = keys
     val again = graft.SparkEntry.queries("q142_erase_audit")(s, sfDir)

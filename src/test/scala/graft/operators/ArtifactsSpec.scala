@@ -57,7 +57,7 @@ class ArtifactsSpec extends SparkSpec {
     val t = Pin.tag(sfDir)
     val pins = Seq(s"mhbands-$t", s"evshingles-$t", s"pairs-$t", s"kmeans-cents-$t",
       s"pq-cents-$t", s"pq-codes-$t", s"pq-lut-$t", s"pq-codes-norm-m8-k16-$t",
-      s"int8-store-$t", s"ivf-cents-$t", s"grams5-$t", s"evgrams5-$t",
+      s"int8-store-$t", s"ivf-cents-$t", s"ann-exact3-$t", s"grams5-$t", s"evgrams5-$t",
       s"textrank-$t-edges", s"srcshingles-$t", s"dsir-features-$t")
     assert(pins.filterNot(Pin.isBuilt(session, _)).isEmpty)
   }
@@ -106,19 +106,24 @@ class ArtifactsSpec extends SparkSpec {
     assert(peak.get <= 4)
   }
 
-  test("builds on one lock never overlap; others run beside them") {
-    val log = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val lock = new Object
-    def step(n: String): Unit = { log.add(s"start $n"); Thread.sleep(20); log.add(s"end $n"); () }
-    def locked(n: String) = art(n)(step(n)).copy(lock = Some(lock))
-    val out = Artifacts.walk(spark, sfDir,
-      Seq(locked("l1"), locked("l2"), locked("l3"), art("free")(step("free"))))
-    assert(out.forall(_._2.isInstanceOf[Artifacts.Built]))
-    val order = log.asScala.toSeq
-    def at(ev: String) = order.indexOf(ev)
-    assert(at("start l2") > at("end l1") && at("start l3") > at("end l2"))
-    // the free build took a pool slot while l1 held the lock
-    assert(at("start free") < at("end l1"))
+  test("two StorageOps layouts build at the same time") {
+    val root = tmpDir("artifacts-overlap")
+    val s = spark.newSession()
+    s.conf.set(StorageOps.RootConfKey, s"$root/layout")
+    val spans = new java.util.concurrent.ConcurrentHashMap[String, (Long, Long)]()
+    val timed = Artifacts.All
+      .filter(a => Set("sorted_lineitem", "bloom_lineitem")(a.name))
+      .map(a => a.copy(build = (sp, d) => {
+        val t0 = System.nanoTime()
+        a.build(sp, d)
+        spans.put(a.name, (t0, System.nanoTime())); ()
+      }))
+    val out = Artifacts.walk(s, sfDir, timed)
+    assert(out.forall(_._2.isInstanceOf[Artifacts.Built]), out.mkString("; "))
+    val (s1, e1) = spans.get("sorted_lineitem")
+    val (s2, e2) = spans.get("bloom_lineitem")
+    assert(s1 < e2 && s2 < e1,
+      s"sorted_lineitem [$s1, $e1] and bloom_lineitem [$s2, $e2] ns did not overlap")
   }
 
   test("a malformed declaration is refused before anything builds") {
