@@ -5,10 +5,10 @@ import java.util.concurrent.{ExecutionException, ExecutorCompletionService, Exec
 import org.apache.spark.sql.SparkSession
 import scala.util.control.NonFatal
 
-/** The session-shared ingest artifacts — pins, session caches and
-  * storage layouts — each declared ONCE: a name, the declared
-  * artifacts its build reads, and a builder that forces the operator's
-  * own pin/cache/`ensure*` function. Operators never need this list:
+/** The session-shared ingest artifacts — pins, session caches,
+  * storage layouts and catalog tables — each declared ONCE: a name,
+  * the declared artifacts its build reads, and a builder that forces
+  * the operator's own pin/cache/`ensure*` function. Operators never need this list:
   * every artifact still builds lazily on its first consumer. The list
   * exists so a harness can build them all up front ([[walk]]) and bill
   * the one-time cost to its own line item — left cold, the FIRST
@@ -75,7 +75,9 @@ object Artifacts {
     artifact("textrank_edges")(TextAnalysis.textrankEdgesPin(_, _).count()),
     artifact("vocab_index")(CorpusOps.sourceShingleIndex(_, _).count()),
     artifact("dsir_features")(CorpusOps.dsirFeatures(_, _).count()),
-    artifact("base_rollup")(SketchOps.ensureBaseRollup))
+    artifact("base_rollup")(SketchOps.ensureBaseRollup),
+    artifact("catalog_orders")(CatalogOps.ensureTable),
+    artifact("catalog_widen")(CatalogOps.ensureWidenTable))
 
   /** Concurrent builds: the artifacts are chains of small stages that
     * each leave most cores idle, and overlapping four measured ~2x

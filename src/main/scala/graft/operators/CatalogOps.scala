@@ -27,35 +27,28 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object CatalogOps {
 
-  /** One warehouse per JVM — the catalog binds its warehouse option at
-    * first use, so it must be stable for the session's lifetime.
-    */
-  private lazy val warehouse: String =
-    java.nio.file.Files.createTempDirectory("graft-cat-wh-").toString
-
   private val tables = new graft.core.Memo[(SparkSession, String, String), String]
 
   /** Build (once per session+dir) and return the catalog table
-    * `graftcat.bench.<name>_<tag>`; `fill` creates and loads it from
-    * `graft_cat_orders_src`, the view of `dir`'s orders.
+    * `graftcat.bench.<name>_<tag>` under the session's `graftcat`
+    * warehouse (configured by [[graft.Tables.configure]]); `fill(tbl,
+    * src)` creates and loads it from `src`, a SQL relation over `dir`'s
+    * orders. Touches no session state — no conf, no temp view — so
+    * builds for several dirs can share one session at once.
     */
   private def catalogTable(spark: SparkSession, dir: String, name: String)(
-      fill: String => Unit): String =
+      fill: (String, String) => Unit): String =
     tables((spark, name, dir)) {
-      spark.conf.set("spark.sql.catalog.graftcat", "graft.catalog.GraftCatalog")
-      spark.conf.set("spark.sql.catalog.graftcat.warehouse", warehouse)
       val tbl = s"graftcat.bench.${name}_${graft.core.Pin.tag(dir)}"
-      spark.read.parquet(s"$dir/orders.parquet")
-        .createOrReplaceTempView("graft_cat_orders_src")
       spark.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.bench")
       spark.sql(s"DROP TABLE IF EXISTS $tbl")
-      fill(tbl)
+      fill(tbl, s"parquet.`$dir/orders.parquet`")
       tbl
     }
 
   /** The q158-q160 table (the build recipe above). */
-  private def ensureTable(spark: SparkSession, dir: String): String =
-    catalogTable(spark, dir, "orders") { tbl =>
+  private[operators] def ensureTable(spark: SparkSession, dir: String): String =
+    catalogTable(spark, dir, "orders") { (tbl, src) =>
       spark.sql(
         s"""CREATE TABLE $tbl (o_orderkey BIGINT, o_totalprice DOUBLE,
            |  o_orderstatus STRING) USING graft PARTITIONED BY (o_orderstatus)
@@ -63,12 +56,12 @@ object CatalogOps {
       spark.sql(
         s"""INSERT INTO $tbl
            |SELECT o_orderkey, o_totalprice, o_orderstatus
-           |FROM graft_cat_orders_src WHERE o_orderkey % 3 = 0
+           |FROM $src WHERE o_orderkey % 3 = 0
            |""".stripMargin)
       spark.sql(
         s"""MERGE INTO $tbl t
            |USING (SELECT o_orderkey, o_totalprice, o_orderstatus
-           |       FROM graft_cat_orders_src WHERE o_orderkey % 2 = 0) s
+           |       FROM $src WHERE o_orderkey % 2 = 0) s
            |ON t.o_orderkey = s.o_orderkey
            |WHEN MATCHED THEN UPDATE SET o_totalprice = t.o_totalprice + s.o_totalprice
            |WHEN NOT MATCHED THEN INSERT (o_orderkey, o_totalprice, o_orderstatus)
@@ -136,6 +129,19 @@ object CatalogOps {
       |FROM orders WHERE o_orderkey % 3 = 0
       |GROUP BY 1 ORDER BY o_orderstatus""".stripMargin
 
+  /** The q161 table (the widening recipe below). */
+  private[operators] def ensureWidenTable(spark: SparkSession, dir: String): String =
+    catalogTable(spark, dir, "widen") { (t, src) =>
+      spark.sql(s"CREATE TABLE $t (o_orderkey INT, o_totalprice DOUBLE) USING graft")
+      spark.sql(
+        s"""INSERT INTO $t SELECT cast(o_orderkey AS INT), o_totalprice
+           |FROM $src WHERE o_orderkey % 5 = 0""".stripMargin)
+      spark.sql(s"ALTER TABLE $t ALTER COLUMN o_orderkey TYPE BIGINT")
+      spark.sql(
+        s"""INSERT INTO $t SELECT o_orderkey + 5000000000, o_totalprice
+           |FROM $src WHERE o_orderkey % 7 = 0""".stripMargin): Unit
+    }
+
   /** q161: metadata-only TYPE WIDENING through pure SQL — the table is
     * created with an INT key, `ALTER TABLE … ALTER COLUMN … TYPE
     * BIGINT` widens it in one pointer commit (no data rewrite), and a
@@ -144,16 +150,7 @@ object CatalogOps {
     * "my id outgrew int32" was a full Overwrite.
     */
   def sqlCatalogWiden(spark: SparkSession, dir: String): DataFrame = {
-    val tbl = catalogTable(spark, dir, "widen") { t =>
-      spark.sql(s"CREATE TABLE $t (o_orderkey INT, o_totalprice DOUBLE) USING graft")
-      spark.sql(
-        s"""INSERT INTO $t SELECT cast(o_orderkey AS INT), o_totalprice
-           |FROM graft_cat_orders_src WHERE o_orderkey % 5 = 0""".stripMargin)
-      spark.sql(s"ALTER TABLE $t ALTER COLUMN o_orderkey TYPE BIGINT")
-      spark.sql(
-        s"""INSERT INTO $t SELECT o_orderkey + 5000000000, o_totalprice
-           |FROM graft_cat_orders_src WHERE o_orderkey % 7 = 0""".stripMargin): Unit
-    }
+    val tbl = ensureWidenTable(spark, dir)
     spark.sql(
       s"""SELECT count(*) AS n_rows, sum(o_orderkey) AS sum_key,
          |  round(sum(o_totalprice), 2) AS sum_price

@@ -1475,19 +1475,20 @@ object CorpusOps {
         .distinct())
   }
 
+  /** Shared-shingle count per source pair (a_source < b_source) over
+    * the distinct (source, s) index — q99's matrix and q132's exact
+    * companion.
+    */
+  private[operators] def sourcePairCommon(idx: DataFrame): DataFrame =
+    bucketPairs(idx, Seq("s"), col("source"))
+      .groupBy(col("a").as("a_source"), col("b").as("b_source"))
+      .agg(count(lit(1)).as("n_common"))
+
   def sourceOverlap(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val idx = sourceShingleIndex(spark, dir)
     val sizes = idx.groupBy($"source").agg(count(lit(1)).as("n"))
-    val common = idx.groupBy($"s")
-      .agg(sort_array(collect_set($"source")).as("srcs"))
-      .filter(size($"srcs") >= 2)
-      .select(explode(expr(
-        "flatten(transform(srcs, (x, i) -> transform(slice(srcs, i + 2, size(srcs)), y -> struct(x as a_source, y as b_source))))"
-      )).as("p"))
-      .groupBy($"p.a_source".as("a_source"), $"p.b_source".as("b_source"))
-      .agg(count(lit(1)).as("n_common"))
-    common
+    sourcePairCommon(idx)
       .join(sizes.toDF("a_source", "n_a"), "a_source")
       .join(sizes.toDF("b_source", "n_b"), "b_source")
       .select($"a_source", $"b_source", $"n_common", $"n_a", $"n_b",

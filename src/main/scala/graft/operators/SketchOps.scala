@@ -141,15 +141,7 @@ object SketchOps {
         theta_sketch_estimate(theta_union($"a_sk", $"b_sk", lit(ThetaLgK))).as("est_union"))
     // exact companion: per-shingle source posting lists, bounded by S
     // (q99's shape — pair expansion can never exceed S²/shingle)
-    val exact = sh.groupBy($"s")
-      .agg(sort_array(collect_set($"source")).as("srcs"))
-      .filter(size($"srcs") >= 2)
-      .select(explode(expr(
-        "flatten(transform(srcs, (x, i) -> transform(slice(srcs, i + 2, size(srcs)), y -> struct(x as a_source, y as b_source))))"
-      )).as("p"))
-      .groupBy($"p.a_source".as("a_source"), $"p.b_source".as("b_source"))
-      .agg(count(lit(1)).as("n_common"))
-    pairs.join(exact, Seq("a_source", "b_source"), "left")
+    pairs.join(CorpusOps.sourcePairCommon(sh), Seq("a_source", "b_source"), "left")
       .withColumn("n_common", coalesce($"n_common", lit(0L)))
       .withColumn("exact_union", $"n_a" + $"n_b" - $"n_common")
       .select($"a_source", $"b_source", $"n_common", $"n_a", $"n_b",

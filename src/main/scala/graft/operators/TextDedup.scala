@@ -62,21 +62,15 @@ object TextDedup {
        |FROM documents WHERE len(string_split(text, ' ')) >= 3""".stripMargin
 
   /** Exact pairwise Jaccard over an (id, shingle) inverted index:
-    * group by shingle → sorted posting list → in-row pair expansion
-    * (nested `transform` over the list, fully codegen'd) → count pairs.
-    * One shuffle on the shingle (vs two for a self-join; measured ~25%
-    * faster) and cost ∝ Σ df(shingle)² either way. |A∪B| by
-    * inclusion-exclusion from per-doc sizes.
+    * per-shingle posting-list pairs ([[TextPrims.bucketPairs]]) →
+    * count pairs. One shuffle on the shingle (vs two for a self-join;
+    * measured ~25% faster) and cost ∝ Σ df(shingle)² either way.
+    * |A∪B| by inclusion-exclusion from per-doc sizes.
     */
   private[operators] def jaccardPairs(index: DataFrame): DataFrame = {
     val sizes = index.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val common = index.groupBy(col("s"))
-      .agg(sort_array(collect_list(col("doc_id"))).as("ds"))
-      .filter(size(col("ds")) >= 2)
-      .select(explode(expr(
-        "flatten(transform(ds, (x, i) -> transform(slice(ds, i + 2, size(ds)), y -> struct(x as a_id, y as b_id))))"
-      )).as("p"))
-      .groupBy(col("p.a_id").as("a_id"), col("p.b_id").as("b_id"))
+    val common = bucketPairs(index, Seq("s"), col("doc_id"))
+      .groupBy(col("a").as("a_id"), col("b").as("b_id"))
       .agg(count(lit(1)).as("common"))
     common
       .join(sizes.toDF("a_id", "na"), "a_id")
@@ -205,22 +199,10 @@ object TextDedup {
     graft.core.Pin.shared(spark, s"mhbands-${graft.core.Pin.tag(dir)}")(
       minhashBands(shingleIndex(spark, dir)))
 
-  /** Within-bucket candidate pairs by in-row expansion (optimization
-    * round 19) — the jaccardPairs shape: ONE exchange keyed on (band,
-    * bkey) replaces the banding self-join (two join legs + distinct
-    * over the joined stream). Identical pair set: each posting list is
-    * sorted ascending, so (x, later y) enumerates exactly the
-    * a_id < b_id pairs of each bucket; the distinct stays because a
-    * pair can share several band buckets.
-    */
+  /** LSH candidate pairs: docs sharing a (band, bkey) bucket. */
   private def bandPairs(bands: DataFrame): DataFrame =
-    bands.groupBy(col("band"), col("bkey"))
-      .agg(sort_array(collect_list(col("doc_id"))).as("ds"))
-      .filter(size(col("ds")) >= 2)
-      .select(explode(expr(
-        "flatten(transform(ds, (x, i) -> transform(slice(ds, i + 2, size(ds)), y -> struct(x as a_id, y as b_id))))"
-      )).as("p"))
-      .select(col("p.a_id").as("a_id"), col("p.b_id").as("b_id"))
+    bucketPairs(bands, Seq("band", "bkey"), col("doc_id"))
+      .select(col("a").as("a_id"), col("b").as("b_id"))
       .distinct()
 
   def dedupMinhashLsh(spark: SparkSession, dir: String): DataFrame = {
@@ -510,24 +492,11 @@ object TextDedup {
           .bitwiseAND((1 << SimhashBandBits) - 1).as("bval"))): _*)).as("bb"))
       .select(col("doc_id"), col("simhash"),
         col("bb.band").as("band"), col("bb.bval").as("bval"))
-    // In-row pair expansion over the per-bucket posting list
-    // (optimization round 19) — the jaccardPairs shape: ONE exchange
-    // keyed on (band, bval) replaces the bucket-census agg + left-semi
-    // cap join + self-join, which evaluated the fingerprint subtree
-    // twice and shuffled it three times. Identical pair set: each
-    // posting list is sorted by (doc_id, simhash) — doc_id is unique,
-    // so (x, later y) enumerates exactly the a_id < b_id pairs of each
-    // bucket; over-cap buckets (and singletons) vanish in the size
-    // filter exactly as they did in `cool`; hamming is a function of
-    // the pair, so the distinct-then-filter result is unchanged.
-    banded.groupBy(col("band"), col("bval"))
-      .agg(sort_array(collect_list(struct(col("doc_id"), col("simhash")))).as("vs"))
-      .filter(size(col("vs")).between(2, SimhashBucketCap))
-      .select(explode(expr(
-        "flatten(transform(vs, (x, i) -> transform(slice(vs, i + 2, size(vs)), y -> struct(x.doc_id as a_id, y.doc_id as b_id, x.simhash as sim_a, y.simhash as sim_b))))"
-      )).as("p"))
-      .select(col("p.a_id").as("a_id"), col("p.b_id").as("b_id"),
-        bit_count(col("p.sim_a").bitwiseXOR(col("p.sim_b"))).cast("long").as("hamming"))
+    // items sort by doc_id first (unique), so a.doc_id < b.doc_id
+    bucketPairs(banded, Seq("band", "bval"), struct(col("doc_id"), col("simhash")),
+        SimhashBucketCap)
+      .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"),
+        bit_count(col("a.simhash").bitwiseXOR(col("b.simhash"))).cast("long").as("hamming"))
       .distinct()
       .filter(col("hamming") <= SimhashMaxHamming)
       .orderBy(col("a_id"), col("b_id"))
@@ -619,24 +588,8 @@ object TextDedup {
       (0 until EmbBands).map(b =>
         struct(lit(b).as("band"), embBucketCol(b, "embedding").as("bucket"))): _*
     )).as("bb")).select($"vec_id", $"bb.band".as("band"), $"bb.bucket".as("bucket"))
-    // In-row pair expansion over the per-bucket posting list
-    // (optimization round 19) — the jaccardPairs shape: ONE exchange
-    // keyed on (band, bucket), the bucket cap applied as a filter on
-    // the collected list's size, pairs expanded by a codegen'd nested
-    // transform. Replaces the old three-branch plan (bucket-census agg
-    // + left-semi cap join + banded self-join), which evaluated the
-    // 24-DotProduct bucketing subtree twice and shuffled it three
-    // times. Identical pair set: sort_array orders each posting list
-    // ascending, so (x, later y) enumerates exactly the a_id < b_id
-    // pairs of every surviving bucket, and buckets over the cap (or
-    // singletons) vanish in the size filter just as they did in `cool`.
-    val pairs = banded0.groupBy($"band", $"bucket")
-      .agg(sort_array(collect_list($"vec_id")).as("vs"))
-      .filter(size($"vs") >= 2 && size($"vs") <= EmbBucketCap)
-      .select(explode(expr(
-        "flatten(transform(vs, (x, i) -> transform(slice(vs, i + 2, size(vs)), y -> struct(x as a_id, y as b_id))))"
-      )).as("p"))
-      .select($"p.a_id".as("a_id"), $"p.b_id".as("b_id"))
+    val pairs = bucketPairs(banded0, Seq("band", "bucket"), $"vec_id", EmbBucketCap)
+      .select($"a".as("a_id"), $"b".as("b_id"))
       .distinct() // a pair may collide in several bands
     val ea = e.select($"vec_id".as("a_id"), $"embedding".as("ea"))
     val eb = e.select($"vec_id".as("b_id"), $"embedding".as("eb"))
@@ -790,23 +743,11 @@ object TextDedup {
   def dedupIncremental(spark: SparkSession, dir: String): DataFrame = {
     val index = shingleIndex(spark, dir).cache() // session-shared: verify side
     val isNew = pmod(col("doc_id"), lit(10)) >= 8
-    // New-against-corpus candidates by in-row expansion over the shared
-    // bands pin (optimization round 19): per (band, bkey) bucket,
-    // collect the new-side and corpus-side posting lists and cross them
-    // inside the row — ONE exchange instead of the two-legged band join
-    // over twice-recomputed signatures. Identical candidate set: a
-    // (new, corp) pair meets in a bucket iff the bucket holds both ids.
-    val bands = minhashBandsPin(spark, dir)
-    val buckets = bands.groupBy(col("band"), col("bkey"))
-      .agg(
-        sort_array(collect_list(when(isNew, col("doc_id")))).as("ns"),
-        sort_array(collect_list(when(!isNew, col("doc_id")))).as("cs"))
-      .filter(size(col("ns")) >= 1 && size(col("cs")) >= 1)
-    val cand = buckets
-      .select(explode(expr(
-        "flatten(transform(ns, n -> transform(cs, c -> struct(n as new_id, c as corp_id))))"
-      )).as("p"))
-      .select(col("p.new_id").as("new_id"), col("p.corp_id").as("corp_id"))
+    // new × corpus candidates over the shared bands pin, in ONE
+    // exchange; never corpus × corpus
+    val cand = bucketCross(minhashBandsPin(spark, dir), Seq("band", "bkey"),
+        col("doc_id"), isNew)
+      .select(col("a").as("a_id"), col("b").as("b_id"))
       .distinct().cache()
     // exact verification through the SHARED set-intersection verify
     // (round 14) — the inline pair-expansion this replaces carried the
@@ -814,8 +755,7 @@ object TextDedup {
     // in verifyJaccard, and a shared definition cannot drift
     val win = org.apache.spark.sql.expressions.Window
       .partitionBy(col("a_id")).orderBy(col("jaccard").desc, col("b_id").asc)
-    verifyJaccard(
-      cand.select(col("new_id").as("a_id"), col("corp_id").as("b_id")), index)
+    verifyJaccard(cand, index)
       .filter(col("jaccard") >= IncrVerifyThreshold)
       .withColumn("rn", row_number().over(win))
       .filter(col("rn") === 1)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Shared text/hash primitives for the data-pipeline operator suite.
@@ -64,6 +64,47 @@ object TextPrims {
 
   /** Band key from the band's signature columns. */
   def minhashBandKey(ms: Seq[Column]): Column = md5(concat_ws(",", ms: _*))
+
+  /** Every pair of distinct `item`s that share a bucket of `rows`
+    * grouped by `keys`, one row per (bucket, pair), as columns `a` < `b`
+    * — the one posting-list pairing behind the Jaccard, LSH, SimHash,
+    * embedding and source-overlap families. ONE exchange, keyed on
+    * `keys`. Invariants every caller relies on:
+    *  - each bucket's posting list is `sort_array(collect_list(item))`,
+    *    so (each element, each later element) enumerates exactly the
+    *    a < b pairs of the bucket (items are distinct within a bucket);
+    *  - a pair recurs once per bucket it shares (several bands, several
+    *    shingles), so the caller decides: `distinct` for a candidate
+    *    set, `count` for a shared-key count;
+    *  - `cap` filters the collected size: a bucket over the cap is
+    *    collected (O(|g|)) but never expanded, nor is a singleton;
+    *  - the expansion streams: it explodes the posting list with each
+    *    element's position, then each row's later elements, so the
+    *    largest array any row holds is the posting list itself, |g| —
+    *    never the |g|(|g|-1)/2 pair array. A hot bucket costs its
+    *    output and nothing more.
+    */
+  def bucketPairs(rows: DataFrame, keys: Seq[String], item: Column,
+      cap: Int = Int.MaxValue): DataFrame =
+    rows.groupBy(keys.map(col): _*)
+      .agg(sort_array(collect_list(item)).as("g"))
+      .filter(size(col("g")).between(2, cap))
+      .select(col("g"), posexplode(col("g")).as(Seq("i", "a")))
+      .select(col("a"), explode(slice(col("g"), col("i") + 2, size(col("g")))).as("b"))
+
+  /** [[bucketPairs]]' cross: every (a, b) pair of one bucket where `a`
+    * comes from a row with `isLeft` and `b` from a row without it
+    * (new batch × corpus). Streamed the same way: it explodes the left
+    * list, then each row's right list; a pair recurs per shared bucket.
+    */
+  def bucketCross(rows: DataFrame, keys: Seq[String], item: Column,
+      isLeft: Column): DataFrame =
+    rows.groupBy(keys.map(col): _*)
+      .agg(collect_list(when(isLeft, item)).as("l"),
+        collect_list(when(!isLeft, item)).as("r"))
+      .filter(size(col("l")) >= 1 && size(col("r")) >= 1)
+      .select(explode(col("l")).as("a"), col("r"))
+      .select(col("a"), explode(col("r")).as("b"))
 
   /** Occurrence count of the most frequent element of a word-array
     * column (named by `arr`) — the shared core of the q71 repetition

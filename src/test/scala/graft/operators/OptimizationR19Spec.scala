@@ -7,13 +7,9 @@ import org.apache.spark.sql.DataFrame
   * property one of this round's rewrites established, so a later
   * refactor can't silently put the cost back:
   *
-  *  - the LSH family (q21/q78/q128) reads its MinHash band keys from
-  *    the durable `mhbands` pin: no per-run salted-md5 signature
-  *    recompute in any of their plans (q128's only md5 is its q19
-  *    exact-fingerprint collapse);
-  *  - q79's and q23's candidate pairing is an in-row posting-list
-  *    expansion over ONE keyed aggregation — no bucket-census
-  *    left-semi cap join, no banded self-join;
+  *  - q21 reads its MinHash band keys from the durable `mhbands` pin:
+  *    no per-run salted-md5 signature recompute in its plan (the
+  *    pairing pins, q78's among them, are in [[BucketPairsSpec]]);
   *  - q105 counts hits with ONE (method, q_id) aggregation over the
   *    unioned candidate sets, not one aggregation per method;
   *  - q62/q105's IVF legs read the pinned coarse-quantizer centroids;
@@ -33,27 +29,6 @@ class OptimizationR19Spec extends SparkSpec {
     val plan = executedPlanString(TextDedup.dedupMinhashLsh(spark, dir))
     assert(plan.contains("mhbands-"), s"q21 must scan the mhbands pin:\n$plan")
     assert(!plan.contains("md5("), s"per-run md5 signature work crept back into q21:\n$plan")
-  }
-
-  test("q78: incremental candidates are an in-row bucket cross over the mhbands pin") {
-    val plan = executedPlanString(TextDedup.dedupIncremental(spark, dir))
-    assert(plan.contains("mhbands-"), s"q78 must scan the mhbands pin:\n$plan")
-    assert(!plan.contains("md5("), s"per-run md5 signature work crept back into q78:\n$plan")
-  }
-
-  test("q79: pairing is one keyed aggregation — no cap semi-join, no self-join") {
-    val plan = executedPlanString(TextDedup.simhashPairs(spark, dir))
-    assert(!plan.contains("Join"), s"a join crept back into q79's pairing:\n$plan")
-  }
-
-  test("q23: pairing is one keyed aggregation — no cap semi-join, no banded self-join") {
-    val plan = executedPlanString(TextDedup.dedupEmbedding(spark, dir))
-    assert(!plan.contains("LeftSemi"),
-      s"the bucket-census cap semi-join crept back into q23:\n$plan")
-    // the embedding fetch joins (by a_id/b_id) legitimately remain; the
-    // pairing itself must be the in-row posting-list expansion
-    assert(plan.contains("collect_list"),
-      s"q23's in-row posting-list pairing is gone:\n$plan")
   }
 
   test("q105: hit counting is ONE (method, q_id) aggregation over the unioned methods") {

@@ -3,6 +3,7 @@ package graft.operators
 import graft.{SparkSpec, SparkEntry}
 import graft.tools.ScaleFixture
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.sql.graft.Bridge
 import scala.collection.mutable
 
 /** Skew robustness under a Zipf hot key: a corpus where 30% of ALL
@@ -27,30 +28,24 @@ class SkewRobustnessSpec extends SparkSpec {
   private final class TaskStats extends SparkListener {
     val durations = mutable.Map.empty[Int, mutable.ArrayBuffer[Long]] // stage -> ms
     var shuffleRecords = 0L
-    var tasks = 0
     override def onTaskEnd(t: SparkListenerTaskEnd): Unit = synchronized {
-      tasks += 1
       durations.getOrElseUpdate(t.stageId, mutable.ArrayBuffer.empty) += t.taskInfo.duration
       if (t.taskMetrics != null)
         shuffleRecords += t.taskMetrics.shuffleWriteMetrics.recordsWritten
     }
   }
 
-  /** Listener events are async: poll until the task count stabilizes
-    * so a late TaskEnd can't land after the assertions read the maps.
+  /** Listener events are async: drain the bus before attaching and
+    * after the action, so no earlier job's TaskEnd is counted and every
+    * TaskEnd of the action has landed before the assertions read the maps.
     */
   private def withStats[A](action: => A): (A, TaskStats) = {
     val stats = new TaskStats
+    Bridge.waitListenerBusEmpty(spark.sparkContext, 60000L)
     spark.sparkContext.addSparkListener(stats)
     try {
       val a = action
-      var last = -1
-      var spins = 0
-      while (stats.synchronized(stats.tasks) != last && spins < 50) {
-        last = stats.synchronized(stats.tasks)
-        Thread.sleep(100)
-        spins += 1
-      }
+      Bridge.waitListenerBusEmpty(spark.sparkContext, 60000L)
       (a, stats)
     } finally spark.sparkContext.removeSparkListener(stats)
   }
